@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Q
 object Bench {
 
   /** Fixed probe kernel: 200M xxhash64 + a 512-key shuffle — pure
@@ -94,129 +95,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: JIT + codegen compilation paths, so the first timed query
-    // is not charged several seconds of JVM startup
-    try {
-      SparkEntry.queries
-        .get("q01_pricing_summary")
-        .foreach(_(spark, sfDir).write.mode("overwrite").format("noop").save())
-    } catch { case _: Throwable => () }
-    // io02's bucketed-table write is load-phase setup (TPC-style): run it
-    // untimed so the io02 measurement is the shuffle-free join itself
-    try { graft.queries.PipelineQueries.io02Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // etl04's 4-file feed staging is the same category: test plumbing
-    // standing in for files that arrive on their own in production
-    try { graft.queries.WarehouseQueries.etl04Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s06's feed staging + corpus signature store: published once when
-    // the corpus lands; the measured query is the per-batch screen
-    try { graft.queries.PipelineQueries.s06Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s08's feed staging + corpus sketch store: same category
-    try { graft.queries.PipelineQueries.s08Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s09's feed staging + corpus LM store: same category
-    try { graft.queries.PipelineQueries.s09Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s10's feed staging + signature/LM/threshold stores: same category
-    try { graft.queries.PipelineQueries.s10Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s11's feed staging + corpus vocabulary-distribution store: same category
-    try { graft.queries.PipelineQueries.s11Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e08/s12's query-feed staging + IVF-PQ index store: published once
-    // when the corpus lands; the measured queries are the serve paths
-    try { graft.queries.PipelineQueries.e08Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e09's publish + append staging: same category
-    try { graft.queries.PipelineQueries.e09Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s13's feed staging + index publish: same category
-    try { graft.queries.PipelineQueries.s13Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s14's feed staging + tokenizer publish: same category
-    try { graft.queries.PipelineQueries.s14Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e10's publish + drifted append staging (the pre-republish store
-    // state); the measured query is the republish + serve
-    try { graft.queries.PipelineQueries.e10Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e11's base-index publish (the pre-refresh store state); the
-    // measured query is the append+tombstone maintenance + serve
-    try { graft.queries.PipelineQueries.e11Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e12's pristine frozen store (the pre-transition state); the
-    // measured query replays the full alarm→republish transition
-    try { graft.queries.PipelineQueries.e12Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s15's feed staging + eval-gram store publish: same category
-    try { graft.queries.PipelineQueries.s15Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // io06's source shard-store publish (the pre-migration artifact);
-    // the measured query is the reshard itself
-    try { graft.queries.PipelineQueries.io06Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // s16's feed staging + classifier publish: same category
-    try { graft.queries.PipelineQueries.s16Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // io09's pristine shard store, staged aside (the pre-window state);
-    // the measured query is the three-wave deletion window + the
-    // policy-fired repack + the store read-back
-    try { graft.queries.PipelineQueries.io09Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // p06's generation-0 publish + maintaining batch-1 refresh (scrubbed
-    // corpus + screen stores + packed store, then generation 1): what
-    // "the corpus is ingested and one refresh window has landed" means
-    // in production; the measured query is the SECOND refresh — the
-    // chained hop
-    try { graft.queries.PipelineQueries.p06Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // p07's three published stores (gen-2 text artifacts, the gen-1
-    // vector index, the gen-1 interleaved media store): the measured
-    // query is applying ONE selection delta across all three tiers
-    try { graft.queries.PipelineQueries.p07Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // p08's policy-governed generation chain (gen-0 publish + three
-    // maintaining hops with the depth-watermark fold firing mid-chain):
-    // the measured query is the fourth refresh against the policy chain
-    try { graft.queries.PipelineQueries.p08Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // e13's fragmented index store (publish + tombstone + six per-wave
-    // appends): the measured query is the compaction + serve proof
-    try { graft.queries.PipelineQueries.e13Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // p09's composed-loop staging (its own 4-hop policy chain over the
-    // embedding-covered range + the hop-1..3 vector maintenance + hop
-    // 4's text fold): the measured query is the vector-tier policy
-    // window + drift gate + composed read-back
-    try { graft.queries.PipelineQueries.p09Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // the curation trio's shared front (scrub → span → near-dup kept
-    // relation + decon id list): the published cleaned-corpus artifact
-    // each training-run cell (p03/p04/p05) curates over
-    try { graft.queries.PipelineQueries.p0345Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // the verified near-dup pair store (the d06 screen's output, an
-    // ingest artifact): d09/d25/d34 are downstream consumers
-    try { graft.queries.PipelineQueries.pairsSetup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // the per-doc quality-signal store (span ratios + LM scores — d30/
-    // d29's ops at ingest): p02's curation decision reads it
-    try { graft.queries.PipelineQueries.p02Setup(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // the embedding near-dup pair store (the e03 screen's output):
-    // d26's semantic scrub and e07's positive mining read it
-    try { graft.queries.PipelineQueries.vecPairsSetup(spark, sfDir) }
-    catch { case _: Throwable => () }
+    val spark = graft.engine.Session.fromEnv()
+    Harness.warmUp(spark, sfDir)
+    // every cell's declared load-phase setup (published stores, staged
+    // feeds — the TPC-style load phase, standing in for artifacts that
+    // arrive on their own in production), untimed, before the probe: the
+    // measured cell is the serve / per-batch / maintenance path itself.
+    // A setup that throws fails every cell that declares it.
+    val cells = SparkEntry.cells
+    val setupErrors = Harness.setUp(spark, sfDir, cells)
     // environment calibration (each probe twice, min — the first may
     // carry JIT). CPU probe: 0.48 s measured quiet on the round-10
     // machine; expected 0.50 keeps a sliver of headroom for same-
@@ -245,44 +132,28 @@ object Bench {
     }
     val (probeSec, probeIoSec) = probePoint()
 
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Boolean, Long, Long) = {
-      // harness parity with ScaleStress.run / OneQuery: drop blocks
-      // pinned by PREVIOUS queries (eager localCheckpoints survive
-      // until their RDD is GC'd) before starting the clock — retained
-      // block-manager state from checkpoint-carrying queries otherwise
-      // bleeds into every later cell (r12: s07 measured 5.4 s in-bench
-      // vs 2.9 s isolated with zero code delta, and the d22/d25 cells
-      // inflated the same way)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime()
-      // negative control for the TOTAL re-adjudication (the z99
-      // convention): a planted per-cell driver stall inflates every
-      // cell's TIME with bytes unchanged — the same-plan-regression
-      // class the byte-identical re-run must NOT excuse. The plant
-      // rides INSIDE time(), so re-adjudication re-runs carry it too:
-      // min(run, retry) stays slow and the gate must still exit 1.
-      // Never set outside the control. (Parsed defensively: a typo'd
-      // value must not crash the whole run outside the try below.)
-      sys.env.get("SPARK_GRAFT_PLANT_CELL_MS")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .filter(_ > 0)
-        .foreach(Thread.sleep)
-      // noop sink: materializes EVERY output column (count() would let
-      // Catalyst prune per-row computed columns out of select-only
-      // queries and under-measure them). Shuffle bytes are metered per
-      // cell (ShuffleMeter, the ScaleStress/OneQuery convention): bytes
-      // are box-independent and rep-stable, so a driver-round bench cell
-      // can be adjudicated WITHOUT a quiet box — the r13 q-tier episode
-      // (nine contiguous cells 2-8× inflated, zero regressions) needed
-      // external min-of-3 reruns because the bench only recorded seconds.
-      val (ok, shr, shw) = try {
-        val (_, r, w) = org.apache.spark.graft.ShuffleMeter.measure(spark.sparkContext) {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        }
-        (true, r, w)
-      } catch { case t: Throwable => System.err.println(s"BENCH FAIL $name: $t"); (false, 0L, 0L) }
-      ((System.nanoTime() - t0) / 1e9, ok, shr, shw)
+    // negative control for the TOTAL re-adjudication (the z99
+    // convention): a planted per-cell driver stall inflates every
+    // cell's TIME with bytes unchanged — the same-plan-regression
+    // class the byte-identical re-run must NOT excuse. The plant
+    // rides INSIDE the timed frame, so re-adjudication re-runs carry it
+    // too: min(run, retry) stays slow and the gate must still exit 1.
+    // Never set outside the control. (Parsed defensively: a typo'd
+    // value must not crash the whole run.)
+    val plantMs = sys.env.get("SPARK_GRAFT_PLANT_CELL_MS")
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .filter(_ > 0)
+    // shuffle bytes are metered per cell: bytes are box-independent and
+    // rep-stable, so a driver-round bench cell can be adjudicated
+    // WITHOUT a quiet box — the r13 q-tier episode (nine contiguous
+    // cells 2-8× inflated, zero regressions) needed external min-of-3
+    // reruns because the bench only recorded seconds.
+    def time(q: Q): Harness.CellRun = {
+      val run = Harness.runCell(spark,
+        { plantMs.foreach(Thread.sleep); q.run(spark, sfDir) },
+        setupErrors.get(q.name))
+      run.error.foreach(t => System.err.println(s"BENCH FAIL ${q.name}: $t"))
+      run
     }
 
     // MID-RUN recalibration (r18 verdict ask #1a): the start/end probes
@@ -297,12 +168,12 @@ object Bench {
     // never loosen the budget because no graft code runs in the kernels
     // (each point is min-of-two, so a one-shot spike can't either).
     val ProbeEvery = 16
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = cells.sortBy(_.name)
     val probeMid = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    val firstPass = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      val (sec, ok, shr, shw) = time(name, fn)
+    val firstPass = ordered.zipWithIndex.map { case (q, i) =>
+      val run = time(q)
       if ((i + 1) % ProbeEvery == 0 && i + 1 < ordered.size) probeMid += probePoint()
-      (name, fn, sec, ok, shr, shw)
+      (q, run)
     }
     // END-OF-RUN point: same rationale, closes the last window
     val (probeEndSec, probeIoEndSec) = probePoint()
@@ -325,10 +196,9 @@ object Bench {
     // class mix at defended per-class rates — light cells at their
     // measured p95, heavy cells at the measured marginal midpoint —
     // and a regression in EITHER class still trips the same gate.
-    val heavySet = SparkEntry.heavyCells
     val lightRate = sys.env.getOrElse("SPARK_GRAFT_BUDGET_LIGHT", "0.85").toDouble
     val heavyRate = sys.env.getOrElse("SPARK_GRAFT_BUDGET_HEAVY", "2.5").toDouble
-    val nHeavy = ordered.count { case (n, _) => heavySet(n) }
+    val nHeavy = ordered.count(_.heavy)
     val nLight = ordered.size - nHeavy
     val totalBudgetUnscaled = sys.env.get("SPARK_GRAFT_BUDGET_TOTAL")
       .map(_.toDouble)
@@ -340,17 +210,19 @@ object Bench {
     // regression is slow (or broken) both times; a noisy neighbor or a
     // transient (port clash, tmp-dir race) usually is not. "retried" is
     // set whenever the re-run executed, even if it changed nothing.
-    val perCellAdjudicated = firstPass.map { case (name, fn, sec, ok, shr, shw) =>
-      if (!ok || sec > perQueryBudget) {
-        val (sec2, ok2, shr2, shw2) = time(name, fn)
+    def row(q: Q, run: Harness.CellRun, retried: Boolean) =
+      (q.name, run.seconds, run.ok, retried, run.shuffleReadBytes, run.shuffleWriteBytes)
+    val perCellAdjudicated = firstPass.map { case (q, run) =>
+      if (!run.ok || run.seconds > perQueryBudget) {
+        val run2 = time(q)
         // adjudicated cell = best successful run; carry ITS bytes (bytes
         // are rep-stable, but a failed run meters a prefix — never mix)
-        val (best, bShr, bShw) =
-          if (ok && ok2) { if (sec2 < sec) (sec2, shr2, shw2) else (sec, shr, shw) }
-          else if (ok2) (sec2, shr2, shw2)
-          else (sec, shr, shw)
-        (name, best, ok || ok2, true, bShr, bShw)
-      } else (name, sec, ok, false, shr, shw)
+        val best =
+          if (run.ok && run2.ok) { if (run2.seconds < run.seconds) run2 else run }
+          else if (run2.ok) run2
+          else run
+        row(q, best, retried = true)
+      } else row(q, run, retried = false)
     }
     // TOTAL re-adjudication (r18 verdict ask #1b): the per-cell retry
     // only fired past the 6 s line, so a run whose phasing spread 0.5-2 s
@@ -385,23 +257,24 @@ object Bench {
               baseSec.get(name).exists(b => sec > b * 1.4 + 0.2) }
           .sortBy { case ((name, sec, _, _, _, _), _) => baseSec(name) - sec }
           .take(48)
-        val fnByName = ordered.toMap // don't rebuild the catalog per re-run
+        val cellByName = ordered.map(q => q.name -> q).toMap
         val it = eligible.iterator
         // stop once comfortably under (8 % inside the line) — the goal is
         // adjudication, not minimization
         while (total > totalBudget * 0.92 && it.hasNext) {
           val ((name, sec, _, _, _, _), idx) = it.next()
           totalRetried += name
-          val (sec2, ok2, shr2, shw2) = time(name, fnByName(name))
+          val run2 = time(cellByName(name))
           // accept the re-run ONLY when ITS bytes also match the
           // baseline (r19 ADVICE #1): a convergent maintenance cell's
           // warm re-run does strictly less work (e.g. an append-missing
           // path that finds nothing to append) — bytes move, and its
           // cheap time must not substitute for a genuine regression in
           // the work the cell exists to measure
-          if (ok2 && sec2 < sec && baseBytes.get(name).exists(bytesMatch(_, shw2))) {
-            rs = rs.updated(idx, (name, sec2, true, true, shr2, shw2))
-            total += sec2 - sec
+          if (run2.ok && run2.seconds < sec &&
+              baseBytes.get(name).exists(bytesMatch(_, run2.shuffleWriteBytes))) {
+            rs = rs.updated(idx, row(cellByName(name), run2, retried = true))
+            total += run2.seconds - sec
           }
         }
       }

@@ -216,40 +216,27 @@ object ScaleStress {
     * the unit a real cluster bills — box-independent, unlike seconds.
     */
   private def runOne(spark: SparkSession, name: String, dir: String): (Double, Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    // noop write + observe, NOT count(): count() lets the optimizer
-    // eliminate unique-key left joins entirely (d15/d16's per-doc
-    // rollup join vanished and "measured" 0.1 s at 500k docs), and
-    // prune per-row computed columns — the observation rides the one
-    // real execution, so rows and time come from the same full run
+    // the row count rides the one real execution as an observation, so
+    // rows and time come from the same full run
     val obs = org.apache.spark.sql.Observation(s"scale_${name}_${System.nanoTime()}")
-    val (_, shRead, shWrite) = org.apache.spark.graft.ShuffleMeter.measure(spark.sparkContext) {
-      queryFn(name)(spark, dir)
-        .observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows"))
-        .write.mode("overwrite").format("noop").save()
-    }
+    val run = Harness.runCell(spark, queryFn(name)(spark, dir)
+      .observe(obs, count(lit(1)).as("rows")))
+    run.error.foreach(t => throw t)
     val rows = obs.get("rows").asInstanceOf[Long]
-    val sec = (System.nanoTime() - t0) / 1e9
+    val sec = run.seconds
     println(f"[scale]   $name%-24s $sec%8.2fs $rows%10d rows " +
-      f"${shRead / 1e6}%10.1f MB shr ${shWrite / 1e6}%10.1f MB shw")
-    (sec, rows, shRead, shWrite)
+      f"${run.shuffleReadBytes / 1e6}%10.1f MB shr ${run.shuffleWriteBytes / 1e6}%10.1f MB shw")
+    (sec, rows, run.shuffleReadBytes, run.shuffleWriteBytes)
   }
 
-  private def run(spark: SparkSession, dir: String): Map[String, (Double, Long, Long, Long)] = {
-    // drop cached/checkpointed blocks from previous queries: pinned
-    // localCheckpoint RDDs otherwise accumulate block-manager pressure
-    // across the session and add ±50% noise to the iterative queries
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  private def run(spark: SparkSession, dir: String): Map[String, (Double, Long, Long, Long)] =
     names.map(name => name -> runOne(spark, name, dir)).toMap
-  }
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_scale")
     // optional 2nd arg: comma-separated tier list, default all three
     val tiers = args.drop(1).headOption.getOrElse("1,10,100").split(",").map(_.trim.toInt).toSeq
-    val spark = graft.engine.Session.local(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.fromEnv()
     // dedup-heavy tiers: the sig/sketch broadcast budget is an operating
     // knob (Dedup.scala docs) — a 1000× run (5M docs) carries a ~2.7 GB
     // sig table, which a 48 GB driver holds comfortably; leaving the
@@ -350,7 +337,6 @@ object ScaleStress {
       println(s"[scale] ${first.size} growth suspect(s) — re-measuring both tiers (min adjudicated)")
       first.map(_._1).distinct.foreach { n =>
         tiers.foreach { t =>
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
           spark.conf.set("spark.graft.stream.statePartitions", stateParts(t).toString)
           val (s, _, _, _) = runOne(spark, n, dirs(t))
           adjudicated((t, n)) = math.min(s, sec(t, n))

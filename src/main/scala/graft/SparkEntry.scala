@@ -21,40 +21,42 @@ object SparkEntry {
       .get
       .run(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
+  /** The catalog cells as served, in catalog order: each `run` is the
+    * frame [[queries]] serves, and each cell keeps its declared setups
+    * (the harnesses run those untimed before the cell).
     *
-    * Every tier except the relational q-tier serves through
+    * Only the cells of `RelationalQueries.all` (q01–q22, q28) keep their
+    * trailing sort. Every other cell, including q23–q27 and q29–q32,
+    * serves through
     * [[org.apache.spark.sql.graft.PlanOps.dropPresentationSort]]: the
     * cells' trailing `orderBy`s are presentation-only (the driver's
     * gate hashes SORTED rows — order is unobservable), and each one
     * cost a range-sampling job + a full output exchange + a sort on
-    * the timed path (guide §2.4). The q-tier keeps its sorts: they
+    * the timed path (guide §2.4). The relational cells keep theirs: they
     * order bounded aggregate outputs (cheap), mirror the reference's
     * dashboard SQL, and RelationalInvariantsSpec asserts row-order
     * properties (pareto cumulative, date spine, month-over-month) on
-    * the served frames.
+    * the served frames. PlanSpec pins this boundary.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+  private[graft] def cells: Seq[Q] = {
     val sorted = RelationalQueries.all.map(_.name).toSet
     catalog.map { q =>
-      q.name -> (
-        if (sorted(q.name)) q.run
-        else (s: SparkSession, d: String) =>
-          org.apache.spark.sql.graft.PlanOps.dropPresentationSort(q.run(s, d)))
-    }.toMap
+      if (sorted(q.name)) q
+      else q.copy(run = (s: SparkSession, d: String) =>
+        org.apache.spark.sql.graft.PlanOps.dropPresentationSort(q.run(s, d)))
+    }
   }
+
+  /** One entry per implemented operator from SURVEY.md §2, served as
+    * [[cells]] describes (setups are not folded in: each `run` calls
+    * its own).
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    cells.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
     catalog.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** The bench budget classes (Q.heavy; SCALE.md "Per-class budget
-    * model"): composed/streaming/store-maintenance cells, whose measured
-    * quiet marginal cost is a different class from a relational/kernel
-    * query's. Bench derives the TOTAL budget from the class mix.
-    */
-  def heavyCells: Set[String] =
-    catalog.filter(_.heavy).map(_.name).toSet
 }

@@ -1,15 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * An optional THIRD arg restricts the dump to a comma-separated name
-  * list (`runMain graft.Verify <sfDir> <outDir> e12_drift_republish`) —
-  * the targeted-gating path when iterating on one cell; the driver
-  * passes two args and always gets the full catalog. oracle_sql.json is
-  * written restricted the same way so `check_oracle.py` over the outDir
-  * adjudicates exactly the dumped subset.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [names]
+  *
+  * The driver passes two args and always gets the full catalog, with
+  * oracle_sql.json rewritten from scratch. The optional THIRD arg is a
+  * comma-separated name list (`... /tmp/out e12_drift_republish`): the
+  * per-cell iteration loop. It dumps just those cells and MERGES their
+  * oracle SQL into the outDir's existing oracle_sql.json (each key
+  * written once), so successive dumps into one outDir gate together
+  * under one `check_oracle.py` run.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -21,15 +24,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))
@@ -39,22 +34,38 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(Paths.get(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.toSeq.filter { case (k, _) => selected(k) },
+      merge = only.isDefined)
     spark.stop()
   }
+
+  /** Writes `entries` as the oracle_sql.json object. With `merge`, the
+    * entries of an existing file are kept (in their order) and each of
+    * `entries` replaces its key or is appended — every key once.
+    */
+  private[graft] def writeOracleSql(
+      path: Path, entries: Seq[(String, String)], merge: Boolean): Unit = {
+    val all = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    if (merge && Files.exists(path))
+      all ++= new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
+        .fields().asScala.map(e => e.getKey -> e.getValue.asText())
+    all ++= entries
+    Files.writeString(path,
+      all.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
+  }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness.
+    */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

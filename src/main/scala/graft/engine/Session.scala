@@ -32,4 +32,12 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session every catalog harness runs on (Bench, Verify, OneQuery,
+    * JobTrace, ExplainAll, ScaleStress): [[local]] at SPARK_GRAFT_CPUS
+    * cores (default: all available), so a tool that adjudicates a bench
+    * cell runs it under exactly the bench's SQL conf.
+    */
+  def fromEnv(): SparkSession =
+    local(sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt))
 }

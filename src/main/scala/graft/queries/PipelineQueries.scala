@@ -5713,9 +5713,9 @@ object PipelineQueries {
     Q("d38_percentile_rank", "global quality-percentile calibration: exact PERCENT_RANK via the two-phase pass", d38, Some(d38Sql)),
     Q("d32_span_dedup_fast", "d30's xxhash64 production fast path == the md5-gated spans", d32, Some(d30Sql)),
     Q("d33_budget_select", "token-budget curation: best-quality docs under a global token budget (two-phase prefix sum)", d33, Some(d33Sql)),
-    Q("d34_best_survivors", "quality-aware near-dup survivors: each cluster keeps its best-quality member", d34, Some(d34Sql)),
+    Q("d34_best_survivors", "quality-aware near-dup survivors: each cluster keeps its best-quality member", d34, Some(d34Sql), setup = Seq(pairsSetup)),
     Q("d35_training_order", "deterministic seeded training-order shuffle with dense global ranks", d35, Some(d35Sql)),
-    Q("d09_dedup_clusters", "connected-component duplicate clusters", d09, Some(d09Sql)),
+    Q("d09_dedup_clusters", "connected-component duplicate clusters", d09, Some(d09Sql), setup = Seq(pairsSetup)),
     Q("d10_tfidf_keywords", "per-doc TF-IDF top-3 keywords", d10, Some(d10Sql)),
     Q("d11_vocab_bigrams", "corpus top-20 bigram vocabulary", d11, Some(d11Sql)),
     Q("d12_text_scrub", "PII-style redaction with match counts", d12, Some(d12Sql)),
@@ -5725,8 +5725,8 @@ object PipelineQueries {
     Q("d16_decontaminate", "benchmark-decontamination n-gram overlap screen", d16, Some(d16Sql)),
     Q("d28_decontaminate_bloom", "bloom-pruned decontamination == d16 (bit-array prune + exact verify)", d28, Some(d16Sql)),
     Q("d17_chunk_scrub", "duplicated-chunk removal (the apply side of d15)", d17, Some(d17Sql)),
-    Q("d25_neardup_scrub", "document near-dup removal (the apply side of d06/d09)", d25, Some(d25Sql)),
-    Q("d26_semantic_scrub", "SemDeDup-style embedding-space dedup: cosine pairs -> components -> scrub", d26, Some(d26Sql)),
+    Q("d25_neardup_scrub", "document near-dup removal (the apply side of d06/d09)", d25, Some(d25Sql), setup = Seq(pairsSetup)),
+    Q("d26_semantic_scrub", "SemDeDup-style embedding-space dedup: cosine pairs -> components -> scrub", d26, Some(d26Sql), setup = Seq(vecPairsSetup)),
     Q("d18_sequence_pack", "concat-and-chunk sequence packing (two-phase prefix sum)", d18, Some(d18Sql)),
     Q("d19_repetition_stats", "Gopher repetition fractions, one in-row pass", d19, Some(d19Sql)),
     Q("d20_pack_manifest", "per-sequence manifest (no-gaps-no-overlaps proof of d18)", d20, Some(d20Sql)),
@@ -5734,37 +5734,37 @@ object PipelineQueries {
     Q("d27_stratified_sample", "exact per-source quota sample by md5 rank (two-phase top-n)", d27, Some(d27Sql)),
     Q("d22_shard_emit", "materialized packed shards read back, per-shard content fingerprints", d22, Some(d22Sql), heavy = true),
     Q("p01_pipeline_composed", "end-to-end screen→score→repetition→chunk-dedup→split pipeline", p01, Some(p01Sql), heavy = true),
-    Q("p02_curated_sample", "composed curation: span screen → LM median filter → per-source quota sample", p02, Some(p02Sql), heavy = true),
-    Q("p03_curation_pipeline", "full batch curation: repetition scrub → span scrub → near-dup scrub → quality budget select → training order → shard emit read back", p03, Some(p03Sql), heavy = true),
-    Q("p04_decon_pipeline", "decontaminating curation: p03 + benchmark n-gram decontamination on the rebuilt post-scrub text before budget selection", p04, Some(p04Sql), heavy = true),
-    Q("p05_idshard_pipeline", "trainer-ready pipeline: p04's decontaminated selection emitted as BPE-id shards (tokenizer trained on the packed set, id-budget pack, decode-through-sink fingerprint)", p05, Some(p05Sql), heavy = true),
-    Q("p06_incremental_refresh", "CHAINED incremental corpus refresh: gen-0 publish → maintaining batch-1 refresh → gen-1 (setup), timed batch-2 refresh against gen-1's stores — gate ≡ one-shot rebuild over corpus ∪ b1 ∪ b2 (refresh ∘ refresh ≡ one-shot), fingerprints read back through the gen-2 store", p06, Some(p06Sql), heavy = true),
-    Q("p07_threetier_refresh", "ONE refresh, THREE tiers: the gen-1→gen-2 selection delta drives text-store read-back, frozen-model ANN append+tombstone+exhaustive serve, and interleaved media-store mask+append+finalize in a single run — one oracle gates all three against the one-shot selection", p07, Some(p07Sql), heavy = true),
-    Q("p08_compaction_policy", "the compaction TRIGGER policy in the refresh loop: three policy-governed maintaining hops (depth watermark fires the compactGen fold mid-chain), timed fourth refresh against the policy's chain ≡ the p06 one-shot oracle — refresh ∘ fold(policy) ∘ refresh³ ≡ one-shot", p08, Some(p06Sql), heavy = true),
-    Q("p09_composed_loop", "THE COMPOSED PRODUCTION LOOP: one maintenance window in which the text chain-depth fold (p08), the vector append-watermark compaction (e13) and the recall-drift republish gate (s13/e12) all fire policy-driven over one real selection delta — texte ≡ one-shot curation, vecteur ≡ brute over the final selection, and a politique row pins version/counter/depth/alarm as the policy contract", p09, Some(p09Sql), heavy = true),
-    Q("s06_stream_ingest_dedup", "streaming ingestion screen == one-shot d14 (§2.9)", s06, Some(d14Sql), heavy = true),
-    Q("s15_stream_decon", "streaming decontamination screen: arriving batches vs the published eval-gram store == one-shot d16 (§2.9)", s15, Some(d16Sql), heavy = true),
-    Q("s16_stream_classify", "streaming classifier screen: per-batch pure-map scoring with the published hashed-NB weights == one-shot d24 (§2.9)", s16, Some(d24Sql), heavy = true),
+    Q("p02_curated_sample", "composed curation: span screen → LM median filter → per-source quota sample", p02, Some(p02Sql), heavy = true, setup = Seq(p02Setup)),
+    Q("p03_curation_pipeline", "full batch curation: repetition scrub → span scrub → near-dup scrub → quality budget select → training order → shard emit read back", p03, Some(p03Sql), heavy = true, setup = Seq(p0345Setup)),
+    Q("p04_decon_pipeline", "decontaminating curation: p03 + benchmark n-gram decontamination on the rebuilt post-scrub text before budget selection", p04, Some(p04Sql), heavy = true, setup = Seq(p0345Setup)),
+    Q("p05_idshard_pipeline", "trainer-ready pipeline: p04's decontaminated selection emitted as BPE-id shards (tokenizer trained on the packed set, id-budget pack, decode-through-sink fingerprint)", p05, Some(p05Sql), heavy = true, setup = Seq(p0345Setup)),
+    Q("p06_incremental_refresh", "CHAINED incremental corpus refresh: gen-0 publish → maintaining batch-1 refresh → gen-1 (setup), timed batch-2 refresh against gen-1's stores — gate ≡ one-shot rebuild over corpus ∪ b1 ∪ b2 (refresh ∘ refresh ≡ one-shot), fingerprints read back through the gen-2 store", p06, Some(p06Sql), heavy = true, setup = Seq(p06Setup)),
+    Q("p07_threetier_refresh", "ONE refresh, THREE tiers: the gen-1→gen-2 selection delta drives text-store read-back, frozen-model ANN append+tombstone+exhaustive serve, and interleaved media-store mask+append+finalize in a single run — one oracle gates all three against the one-shot selection", p07, Some(p07Sql), heavy = true, setup = Seq(p07Setup)),
+    Q("p08_compaction_policy", "the compaction TRIGGER policy in the refresh loop: three policy-governed maintaining hops (depth watermark fires the compactGen fold mid-chain), timed fourth refresh against the policy's chain ≡ the p06 one-shot oracle — refresh ∘ fold(policy) ∘ refresh³ ≡ one-shot", p08, Some(p06Sql), heavy = true, setup = Seq(p08Setup)),
+    Q("p09_composed_loop", "THE COMPOSED PRODUCTION LOOP: one maintenance window in which the text chain-depth fold (p08), the vector append-watermark compaction (e13) and the recall-drift republish gate (s13/e12) all fire policy-driven over one real selection delta — texte ≡ one-shot curation, vecteur ≡ brute over the final selection, and a politique row pins version/counter/depth/alarm as the policy contract", p09, Some(p09Sql), heavy = true, setup = Seq(p09Setup)),
+    Q("s06_stream_ingest_dedup", "streaming ingestion screen == one-shot d14 (§2.9)", s06, Some(d14Sql), heavy = true, setup = Seq(s06Setup)),
+    Q("s15_stream_decon", "streaming decontamination screen: arriving batches vs the published eval-gram store == one-shot d16 (§2.9)", s15, Some(d16Sql), heavy = true, setup = Seq(s15Setup)),
+    Q("s16_stream_classify", "streaming classifier screen: per-batch pure-map scoring with the published hashed-NB weights == one-shot d24 (§2.9)", s16, Some(d24Sql), heavy = true, setup = Seq(s16Setup)),
     Q("s07_stream_pack", "streaming incremental packing == one-shot d18 (§2.9)", s07, Some(d18Sql), heavy = true),
-    Q("s08_stream_semantic_screen", "streaming embedding-space screen vs exhaustive cross-split cosine oracle (§2.9)", s08, Some(s08Sql), heavy = true),
-    Q("s09_stream_quality_screen", "streaming perplexity screen against the stored corpus LM (§2.9 composed with d29)", s09, Some(s09Sql), heavy = true),
-    Q("s10_stream_curate", "composed streaming ingest: dedup screen → LM quality screen → incremental pack in one foreachBatch (§2.9, p02's streaming twin)", s10, Some(s10Sql), heavy = true),
-    Q("s11_stream_drift", "streaming per-source KL drift monitor against the stored corpus distribution (§2.9 composed with d37)", s11, Some(s11Sql), heavy = true),
+    Q("s08_stream_semantic_screen", "streaming embedding-space screen vs exhaustive cross-split cosine oracle (§2.9)", s08, Some(s08Sql), heavy = true, setup = Seq(s08Setup)),
+    Q("s09_stream_quality_screen", "streaming perplexity screen against the stored corpus LM (§2.9 composed with d29)", s09, Some(s09Sql), heavy = true, setup = Seq(s09Setup)),
+    Q("s10_stream_curate", "composed streaming ingest: dedup screen → LM quality screen → incremental pack in one foreachBatch (§2.9, p02's streaming twin)", s10, Some(s10Sql), heavy = true, setup = Seq(s10Setup)),
+    Q("s11_stream_drift", "streaming per-source KL drift monitor against the stored corpus distribution (§2.9 composed with d37)", s11, Some(s11Sql), heavy = true, setup = Seq(s11Setup)),
     Q("e01_knn_brute", "exact brute-force cosine top-k", e01, Some(e01Sql)),
     Q("e02_knn_ivf", "IVF cell-join top-k, exhaustive probe vs brute oracle", e02, Some(e01Sql)),
     Q("e04_knn_ivf_trained", "k-means-trained IVF top-k, exhaustive probe", e04, Some(e01Sql)),
     Q("e05_knn_pq", "product-quantization ADC + exact re-rank, full shortlist vs brute oracle", e05, Some(e01Sql)),
     Q("e06_knn_ivf_pq", "composed IVF-PQ: cell-pruned ADC scan + exact re-rank, exhaustive config vs brute oracle", e06, Some(e01Sql)),
-    Q("e08_knn_stored_index", "IVF-PQ served from the persisted index store (no retraining), exhaustive config vs brute oracle", e08, Some(e01Sql), heavy = true),
-    Q("e09_index_append", "incremental index maintenance: frozen-model append to the published store, served over the grown corpus vs union brute oracle", e09, Some(e09Sql), heavy = true),
-    Q("s12_stream_ann_serve", "streaming ANN serve: query micro-batches probe the stored IVF-PQ index (§2.9)", s12, Some(e01Sql), heavy = true),
-    Q("e10_index_republish", "index re-publish (the recall-drift alarm's action): retrain on the drifted corpus, re-encode in one map pass, atomic swap; exhaustive serve over both regimes vs the union brute oracle", e10, Some(e10Sql), heavy = true),
-    Q("e11_index_refresh", "ANN refresh maintenance (the p06 selection delta in the vector tier): frozen-model append of entrants + tombstone of evictees from the codes store, exhaustive serve ≡ one-shot index over the refreshed selection", e11, Some(e11Sql), heavy = true),
-    Q("e13_index_compact", "ANN store compaction, POLICY-triggered: five policy-governed appends fragment the store in setup (counter under the watermark); the timed sixth wave crosses the append-count watermark, fires the range-cluster compaction (staged + atomic swap), and the exhaustive serve ≡ brute over the refreshed selection — the policy changes WHEN the fold runs, compaction changes layout, never content", e13, Some(e11Sql), heavy = true),
-    Q("e12_drift_republish", "the drift→republish TRANSITION as one flow: frozen-model append of drifted arrivals → production-config recall alarm (s13) → republish driven BY the alarm (e10) → post-republish production probe clears the floor → exhaustive serve ≡ brute over the union; decision chain + serve under one oracle", e12, Some(e12Sql), heavy = true),
-    Q("s13_stream_ann_drift", "ANN recall-drift monitor: per-append frozen-model serve vs brute on a deterministic sample (gate in the exhaustive e05/e06 configuration: recall ≡ 1.0 SQL-derivable; production-config alarm pinned in StreamingSpec)", s13, Some(s13Sql), heavy = true),
-    Q("s14_stream_idshards", "streaming BPE-id shard emission: frozen published tokenizer, slice-grain incremental pack continuing the global offset; decode of the drained log rebuilds every doc (d39 through the stream)", s14, Some(d39Sql), heavy = true),
-    Q("e07_triplet_mine", "contrastive triplet mining: LSH positives + exhaustive-probe IVF hard negatives, batched", e07, Some(e07Sql)),
+    Q("e08_knn_stored_index", "IVF-PQ served from the persisted index store (no retraining), exhaustive config vs brute oracle", e08, Some(e01Sql), heavy = true, setup = Seq(e08Setup)),
+    Q("e09_index_append", "incremental index maintenance: frozen-model append to the published store, served over the grown corpus vs union brute oracle", e09, Some(e09Sql), heavy = true, setup = Seq(e09Setup)),
+    Q("s12_stream_ann_serve", "streaming ANN serve: query micro-batches probe the stored IVF-PQ index (§2.9)", s12, Some(e01Sql), heavy = true, setup = Seq(e08Setup)),
+    Q("e10_index_republish", "index re-publish (the recall-drift alarm's action): retrain on the drifted corpus, re-encode in one map pass, atomic swap; exhaustive serve over both regimes vs the union brute oracle", e10, Some(e10Sql), heavy = true, setup = Seq(e10Setup)),
+    Q("e11_index_refresh", "ANN refresh maintenance (the p06 selection delta in the vector tier): frozen-model append of entrants + tombstone of evictees from the codes store, exhaustive serve ≡ one-shot index over the refreshed selection", e11, Some(e11Sql), heavy = true, setup = Seq(e11Setup)),
+    Q("e13_index_compact", "ANN store compaction, POLICY-triggered: five policy-governed appends fragment the store in setup (counter under the watermark); the timed sixth wave crosses the append-count watermark, fires the range-cluster compaction (staged + atomic swap), and the exhaustive serve ≡ brute over the refreshed selection — the policy changes WHEN the fold runs, compaction changes layout, never content", e13, Some(e11Sql), heavy = true, setup = Seq(e13Setup)),
+    Q("e12_drift_republish", "the drift→republish TRANSITION as one flow: frozen-model append of drifted arrivals → production-config recall alarm (s13) → republish driven BY the alarm (e10) → post-republish production probe clears the floor → exhaustive serve ≡ brute over the union; decision chain + serve under one oracle", e12, Some(e12Sql), heavy = true, setup = Seq(e12Setup)),
+    Q("s13_stream_ann_drift", "ANN recall-drift monitor: per-append frozen-model serve vs brute on a deterministic sample (gate in the exhaustive e05/e06 configuration: recall ≡ 1.0 SQL-derivable; production-config alarm pinned in StreamingSpec)", s13, Some(s13Sql), heavy = true, setup = Seq(s13Setup)),
+    Q("s14_stream_idshards", "streaming BPE-id shard emission: frozen published tokenizer, slice-grain incremental pack continuing the global offset; decode of the drained log rebuilds every doc (d39 through the stream)", s14, Some(d39Sql), heavy = true, setup = Seq(s14Setup)),
+    Q("e07_triplet_mine", "contrastive triplet mining: LSH positives + exhaustive-probe IVF hard negatives, batched", e07, Some(e07Sql), setup = Seq(vecPairsSetup)),
     Q("e03_embedding_neardup", "hyperplane-LSH cosine near-dups vs exhaustive oracle", e03, Some(e03Sql)),
     Q("m01_media_meta", "binary payload metadata + sha256", m01, Some(m01Sql)),
     Q("m02_media_features", "mapPartitions feature extraction", m02, Some(m02Sql)),
@@ -5782,14 +5782,14 @@ object PipelineQueries {
              |FROM orders
              |GROUP BY o_orderstatus
              |ORDER BY o_orderstatus""".stripMargin)),
-    Q("io02_bucketed_join", "bucketed co-partitioned shuffle-free SMJ", io02, Some(io02Sql)),
+    Q("io02_bucketed_join", "bucketed co-partitioned shuffle-free SMJ", io02, Some(io02Sql), setup = Seq(io02Setup)),
     Q("io03_compact_roundtrip", "range-clustered small-file compaction (§2.9)", io03, Some(io03Sql)),
     Q("io05_slicelog_finalize", "slice-log finalize: closed whole shards become immutable files, the log trims to its open tail, appends resume from the recovered offset (d39 losslessness through the finalized store)", io05, Some(d39Sql), heavy = true),
-    Q("io06_shard_reshard", "shard-store reshard (context-length migration): re-cut the published store at a new budget from stored offsets, no corpus re-read; every doc reassembles from the re-cut (equality with the direct pack pinned in PackSpec)", io06, Some(d39Sql), heavy = true),
-    Q("io07_shard_tombstone", "shard-store tombstone (deletion request): mask a bounded id set's token ranges in place with a pad — offsets, boundaries and provenance frozen; oracle recomputes each doc's post-scrub fingerprint", io07, Some(io07Sql), heavy = true),
-    Q("io08_tombstone_mass", "takedown-scale tombstone: a deletion RELATION (half the corpus) masks through the distributed join fallback — ids never collect to the driver, token arrays cross one seq-keyed exchange; same per-doc fingerprint oracle as io07", io08, Some(io08Sql), heavy = true),
-    Q("io09_repack_policy", "shard-store REPACK POLICY (the p08/e13 doctrine in the packed-shard tier): deletion waves register logically, serves mask at read, and the dead-token-fraction watermark fires a survivors-repack staged+swapped with the registry cleared; gate = d22 boundary-exact oracle over the survivor corpus + the policy contract row", io09, Some(io09Sql), heavy = true),
-    Q("io10_masked_serve", "MASKED SERVE under logical deletion (the io09 registry's compliance property): a below-watermark wave registers, no repack runs, and readShardsMasked over the unrewritten files rolls up boundary-exact against the one-shot pack with the registered classes padded — same offsets/provenance, every registered token padded, every survivor bit-identical, plus the no-repack politique pin", io10, Some(io10Sql), heavy = true),
+    Q("io06_shard_reshard", "shard-store reshard (context-length migration): re-cut the published store at a new budget from stored offsets, no corpus re-read; every doc reassembles from the re-cut (equality with the direct pack pinned in PackSpec)", io06, Some(d39Sql), heavy = true, setup = Seq(io06Setup)),
+    Q("io07_shard_tombstone", "shard-store tombstone (deletion request): mask a bounded id set's token ranges in place with a pad — offsets, boundaries and provenance frozen; oracle recomputes each doc's post-scrub fingerprint", io07, Some(io07Sql), heavy = true, setup = Seq(io06Setup)),
+    Q("io08_tombstone_mass", "takedown-scale tombstone: a deletion RELATION (half the corpus) masks through the distributed join fallback — ids never collect to the driver, token arrays cross one seq-keyed exchange; same per-doc fingerprint oracle as io07", io08, Some(io08Sql), heavy = true, setup = Seq(io06Setup)),
+    Q("io09_repack_policy", "shard-store REPACK POLICY (the p08/e13 doctrine in the packed-shard tier): deletion waves register logically, serves mask at read, and the dead-token-fraction watermark fires a survivors-repack staged+swapped with the registry cleared; gate = d22 boundary-exact oracle over the survivor corpus + the policy contract row", io09, Some(io09Sql), heavy = true, setup = Seq(io09Setup)),
+    Q("io10_masked_serve", "MASKED SERVE under logical deletion (the io09 registry's compliance property): a below-watermark wave registers, no repack runs, and readShardsMasked over the unrewritten files rolls up boundary-exact against the one-shot pack with the registered classes padded — same offsets/provenance, every registered token padded, every survivor bit-identical, plus the no-repack politique pin", io10, Some(io10Sql), heavy = true, setup = Seq(io09Setup)),
     Q("io04_jdbc_extract", "JDBC remote-scan extract via embedded Derby (S4)", io04, Some(io04Sql)),
     Q("w01_partitioned_io", "partitioned write + pruned read", w01, Some(w01Sql)),
     Q("s01_stream_daily", "Structured Streaming daily rollup", s01, Some(s01Sql), heavy = true),

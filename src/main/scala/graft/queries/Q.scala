@@ -32,5 +32,11 @@ final case class Q(
       * one flat per-cell rate (r18 verdict ask #6: every added composed
       * cell was a forced withdrawal from the same margin account).
       */
-    heavy: Boolean = false
+    heavy: Boolean = false,
+    /** Load-phase fixtures the cell reads (published stores, staged
+      * feeds): the harnesses run them untimed before the cell, in
+      * catalog order. Each is idempotent (it checks its own fingerprint
+      * marker) and `run` still calls it, so a cell stays self-sufficient.
+      */
+    setup: Seq[(SparkSession, String) => Unit] = Nil
 )

@@ -543,7 +543,7 @@ private[graft] object RefreshPipeline {
     // before it grew its own dropBlocks counter (r18 ADVICE #1).
     // Sweep by id-snapshot diff: refreshGen runs its internal futures
     // to completion before returning, and no caller overlaps it with
-    // other persisting work (p06/p07/RefreshSpec/Dev all call it
+    // other persisting work (p06/p07/RefreshSpec all call it
     // sequentially), so every new persistent RDD id is ours.
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {

@@ -20,9 +20,7 @@ object ExplainAll {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.engine.Session.local(cpus.toInt)
+    val spark = graft.engine.Session.fromEnv()
     new java.io.File(outDir).mkdirs()
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -14,10 +14,7 @@ object JobTrace {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString).toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.fromEnv()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -39,16 +36,18 @@ object JobTrace {
           case _ =>
         }
     }
-    val fn = graft.SparkEntry.queries(name)
-    try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    catch { case t: Throwable => println(s"warm fail: $t") }
+    val cell = graft.Harness.cell(name)
+    // the cell's setups untimed (as Bench), then one untraced warm run
+    val setupError = graft.Harness.setUp(spark, sfDir, Seq(cell)).get(name)
+    graft.Harness.runCell(spark, cell.run(spark, sfDir), setupError).error
+      .foreach(t => println(s"warm fail: $t"))
     spark.sparkContext.addSparkListener(listener)
-    (1 to reps).foreach { i =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      println(f"TOTAL rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val runs = (1 to reps).map { i =>
+      val run = graft.Harness.runCell(spark, cell.run(spark, sfDir), setupError)
+      println(f"TOTAL rep$i: ${run.seconds}%.2f s" + run.error.fold("")(t => s" FAILED $t"))
+      run
     }
     spark.stop()
+    if (runs.exists(!_.ok)) sys.exit(1)
   }
 }

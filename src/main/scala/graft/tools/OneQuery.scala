@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single catalog query in isolation — the per-query iteration
   * loop (Bench runs the whole catalog; this answers "did MY query get
   * faster" without the other 77).
@@ -17,12 +15,10 @@ object OneQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val explainOnly = args.length > 2 && args(2) == "explain"
     val reps = if (args.length > 2 && !explainOnly) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // the exact session ScaleStress uses (AQE, 4g maxResultSize) — an
-    // adjudication must reproduce the stress run's environment, not a
+    // the bench's own session (the one every harness uses) — an
+    // adjudication must reproduce the measured run's environment, not a
     // differently-tuned one
-    val spark = graft.engine.Session.local(cpus.toInt)
+    val spark = graft.engine.Session.fromEnv()
     // same dedup-broadcast operating knob as ScaleStress: adjudicating a
     // heavy tier (x1000's 2.7 GB sig table) needs the budget the stress
     // run used, or d06 exercises the fallback instead of the plan under
@@ -39,33 +35,28 @@ object OneQuery {
     sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").foreach { v =>
       spark.conf.set("spark.graft.stream.statePartitions", v)
     }
-    val fn = graft.SparkEntry.queries(name)
+    val cell = graft.Harness.cell(name)
     if (explainOnly) {
-      fn(spark, sfDir).explain("formatted")
+      cell.run(spark, sfDir).explain("formatted")
       spark.stop()
       return
     }
-    // same warmup convention as Bench
-    try graft.SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => () }
-    (1 to reps).foreach { i =>
-      // harness parity with ScaleStress.run: drop blocks pinned by the
-      // PREVIOUS rep (cached relations, localCheckpoint RDDs) — without
-      // this, reps of checkpoint-carrying queries accumulate block-
-      // manager state until the heap GC-freezes (d10 at the 1000× tier
-      // went 482 s → 733 s across reps from exactly this)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime()
-      // shuffle bytes metered per rep (box-independent, the SCALE.md
-      // byte-column unit) — rep-stable, so rep1's cold-cache caveat
-      // applies to the seconds only
-      val (_, shr, shw) = org.apache.spark.graft.ShuffleMeter.measure(spark.sparkContext) {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    // same warmup and untimed setups as Bench, so rep1 times the cell,
+    // not its fixture build
+    graft.Harness.warmUp(spark, sfDir)
+    val setupError = graft.Harness.setUp(spark, sfDir, Seq(cell)).get(name)
+    // rep1 still carries cold caches and JIT; shuffle bytes are rep-stable
+    val runs = (1 to reps).map { i =>
+      val run = graft.Harness.runCell(spark, cell.run(spark, sfDir), setupError)
+      run.error match {
+        case None =>
+          println(f"ONEQUERY $name rep$i: ${run.seconds}%.2f s " +
+            f"shr=${run.shuffleReadBytes / 1e6}%.1f MB shw=${run.shuffleWriteBytes / 1e6}%.1f MB")
+        case Some(t) => println(s"ONEQUERY $name rep$i: FAILED $t")
       }
-      println(f"ONEQUERY $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        f"shr=${shr / 1e6}%.1f MB shw=${shw / 1e6}%.1f MB")
+      run
     }
     spark.stop()
+    if (runs.exists(!_.ok)) sys.exit(1)
   }
 }

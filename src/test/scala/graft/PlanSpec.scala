@@ -320,4 +320,28 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"query side must broadcast:\n$p")
   }
+
+  test("presentation sort: q-cells keep a trailing sort iff they are RelationalQueries cells") {
+    // the q23–q32 boundary (SparkEntry.cells): RelationalQueries.all
+    // (q01–q22, q28) is served as written; every other q-cell is served
+    // through dropPresentationSort, which strips q23–q25, q27 and
+    // q29–q32. q03 (top-k: Limit root), q11 (one scalar row), q14 and
+    // q26 end without a sort, so there is nothing to keep or strip.
+    import graft.queries.{EventsQueries, RelationalQueries, WarehouseQueries}
+    def rootSort(df: DataFrame): Boolean = df.queryExecution.logical match {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.global
+      case _ => false
+    }
+    val relational = RelationalQueries.all.map(_.name).toSet
+    val qCells = (RelationalQueries.all ++ EventsQueries.all ++ WarehouseQueries.all)
+      .filter(_.name.matches("q[0-9]{2}_.*"))
+    assert(qCells.size == 32, s"expected q01–q32, saw ${qCells.map(_.name).sorted}")
+    val written = qCells.filter(q => rootSort(q.run(spark, sfDir))).map(_.name).toSet
+    val served = qCells.filter(q => rootSort(SparkEntry.queries(q.name)(spark, sfDir))).map(_.name).toSet
+    assert(served == written.intersect(relational),
+      s"served root sorts ${served.toSeq.sorted} != the relational cells' ${written.intersect(relational).toSeq.sorted}")
+    val stripped = (written -- relational).map(_.take(3))
+    assert(stripped == Set("q23", "q24", "q25", "q27", "q29", "q30", "q31", "q32"),
+      s"stripped q-cells: ${stripped.toSeq.sorted}")
+  }
 }
