@@ -40,17 +40,12 @@ object Bench {
 
   private def probeIo(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions._
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_bench_ioprobe"
-    val marker = new java.io.File(s"$dir/_FORMAT")
-    val markerFresh = new java.io.File(s"$dir/_SUCCESS").exists() &&
-      marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == ioProbeFormat
-    if (!markerFresh) {
+    val dir = graft.engine.Fixture.tmp("bench_ioprobe")
+    graft.engine.Fixture.once(spark, dir, ioProbeFormat) {
       spark.range(0, 8000000L, 1, 32)
         .select(col("id"), xxhash64(col("id")).as("h"),
           md5(col("id").cast("string")).as("s"))
         .write.mode("overwrite").parquet(dir)
-      java.nio.file.Files.write(marker.toPath, ioProbeFormat.getBytes)
     }
     val t0 = System.nanoTime()
     spark.read.parquet(dir)

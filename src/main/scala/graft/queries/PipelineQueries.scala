@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
+import graft.engine.Fixture
 import graft.functions.{Bpe, Text, Vectors}
 import graft.operators.{Dedup, LangModel, Mix, Pack, Similarity, Upsert}
 import graft.multimodal.Multimodal
@@ -18,6 +19,12 @@ import graft.streaming.EventsStream
   * hash-compared.
   */
 object PipelineQueries {
+
+  /** Fixture fingerprint stamps of the two corpus tables. */
+  private def docStamp(spark: SparkSession, dir: String): String =
+    Fixture.stamp(spark, s"$dir/documents.parquet")
+  private def emStamp(spark: SparkSession, dir: String): String =
+    Fixture.stamp(spark, s"$dir/embeddings.parquet")
 
   // ---------------------------------------------------------------------
   // d01 — exact dedup via hash-groupBy (deterministic min-id winner).
@@ -195,8 +202,7 @@ object PipelineQueries {
       .minhashLsh(Tables.documents(spark, dir), "doc_id", "text", shingleN = 3, k = 64, bands = 32, threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
 
-  private[graft] def pairsStoreDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_pairs_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def pairsStoreDir(dir: String): String = Fixture.workDir("pairs", dir)
 
   /** One-time publish of the verified near-dup PAIR relation (the d06
     * screen's output) — the ingest artifact the cluster/scrub/survivor
@@ -208,22 +214,11 @@ object PipelineQueries {
     * Idempotent per input via the fingerprint marker.
     */
   def pairsSetup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"documents:${src.getLen}:${src.getModificationTime}:lsh3x64b32t05-pairs-v1"
     val st = pairsStoreDir(dir)
-    val marker = new java.io.File(s"$st/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(st), true)
+    Fixture.once(spark, st, s"documents:${docStamp(spark, dir)}:lsh3x64b32t05-pairs-v1") {
       Dedup.minhashLsh(Tables.documents(spark, dir), "doc_id", "text",
           shingleN = 3, k = 64, bands = 32, threshold = 0.5)
         .write.mode("overwrite").parquet(s"$st/pairs")
-      new java.io.File(st).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -566,8 +561,7 @@ object PipelineQueries {
   // brute oracle checks the store write → read → serve composition
   // bit-for-bit; production nProbe recall is spec-tested.
   // ---------------------------------------------------------------------
-  private def e08WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e08_${Integer.toHexString(dir.hashCode)}"
+  private def e08WorkDir(dir: String): String = Fixture.workDir("e08", dir)
 
   /** Publish-time staging (query feed + index store) — Bench runs this
     * untimed; shared by e08 (batch serve) and s12 (streaming serve).
@@ -592,20 +586,13 @@ object PipelineQueries {
   // codes ARE what a one-shot publish would have written — follows
   // because both paths encode with the same frozen model.
   // ---------------------------------------------------------------------
-  private def e09WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e09_${Integer.toHexString(dir.hashCode)}"
+  private def e09WorkDir(dir: String): String = Fixture.workDir("e09", dir)
 
   /** Publish + one append — load-phase staging (Bench runs untimed). */
   def e09Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"embeddings:${src.getLen}:${src.getModificationTime}:ivfpq-n16-m8-c16-i3-append-compact-cellpart-v2"
     val w = e09WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    Fixture.once(spark, w,
+        s"embeddings:${emStamp(spark, dir)}:ivfpq-n16-m8-c16-i3-append-compact-cellpart-v2") {
       val em = Tables.embeddings(spark, dir)
       graft.operators.AnnIndex.write(em, "vec_id", "embedding", s"$w/index",
         nList = 16, m = 8, codes = 16, iters = 3)
@@ -615,7 +602,6 @@ object PipelineQueries {
       // the e09 gate then serves from the COMPACTED store, proving the
       // maintenance op preserves every code row
       graft.operators.AnnIndex.compact(spark, s"$w/index")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -679,8 +665,7 @@ object PipelineQueries {
   // above the floor at production nProbe) is model-dependent and is
   // pinned in SimilaritySpec, the s13 alarm-semantics convention.
   // ---------------------------------------------------------------------
-  private def e10WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e10_${Integer.toHexString(dir.hashCode)}"
+  private def e10WorkDir(dir: String): String = Fixture.workDir("e10", dir)
 
   /** The drifted arrival: every 5th base vector shifted +4.0 per
     * component under a disjoint id range — deterministic, so the
@@ -698,21 +683,13 @@ object PipelineQueries {
     * republish itself, which IS the operator).
     */
   def e10Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"embeddings:${src.getLen}:${src.getModificationTime}:ivfpq-n16-m8-c16-i3-republish-cellpart-v2"
     val w = e10WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    Fixture.once(spark, w,
+        s"embeddings:${emStamp(spark, dir)}:ivfpq-n16-m8-c16-i3-republish-cellpart-v2") {
       val em = Tables.embeddings(spark, dir)
       graft.operators.AnnIndex.write(em, "vec_id", "embedding", s"$w/index",
         nList = 16, m = 8, codes = 16, iters = 3)
       graft.operators.AnnIndex.append(e10Drift(em), "vec_id", "embedding", s"$w/index")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -796,8 +773,7 @@ object PipelineQueries {
   // first (a bytes-of-codes fs copy, the restart-replay convention;
   // production reruns a transition from its journal the same way).
   // ---------------------------------------------------------------------
-  private def e12WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e12_${Integer.toHexString(dir.hashCode)}"
+  private def e12WorkDir(dir: String): String = Fixture.workDir("e12", dir)
 
   /** SimilaritySpec's drifted arrival wave j: every 5th base vector,
     * ±1% per-copy jitter then a +4.0 per-component shift, disjoint id
@@ -839,26 +815,17 @@ object PipelineQueries {
     * the conservative side of best-of-two).
     */
   def e12Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"embeddings:${src.getLen}:${src.getModificationTime}:ivfpq-n16-m8-c16-i3-transition-cellpart-v3"
     val w = e12WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(w), true)
+    Fixture.once(spark, w,
+        s"embeddings:${emStamp(spark, dir)}:ivfpq-n16-m8-c16-i3-transition-cellpart-v3") {
       graft.operators.AnnIndex.write(Tables.embeddings(spark, dir),
         "vec_id", "embedding", s"$w/pristine", nList = 16, m = 8, codes = 16, iters = 3)
-      new java.io.File(w).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
     // always leave the live store pristine-and-marked: the transition is
     // one-way, so a store a previous run republished (or crashed
     // mid-mutation — marker already removed) must be replayed
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$w/index/_REPLAY_PRISTINE")))
+    val pristine = new org.apache.hadoop.fs.Path(s"$w/index/_REPLAY_PRISTINE")
+    if (!pristine.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pristine))
       e12Restore(spark, w)
   }
 
@@ -1028,8 +995,7 @@ object PipelineQueries {
   // compact cost class — a cell-partitioned store would prune to
   // touched files), atomically swapped; the raw vectors never move.
   // ---------------------------------------------------------------------
-  private def e11WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e11_${Integer.toHexString(dir.hashCode)}"
+  private def e11WorkDir(dir: String): String = Fixture.workDir("e11", dir)
 
   /** The refresh's entrant embeddings: every vec_id % 10 = 5 base
     * vector, ±2% deterministically jittered (the e03 arithmetic — the
@@ -1059,21 +1025,11 @@ object PipelineQueries {
     * runs untimed; the gate times the maintenance itself).
     */
   def e11Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"embeddings:${src.getLen}:${src.getModificationTime}:ivfpq-n16-m8-c16-i3-refresh-cellpart-v2"
     val w = e11WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(w), true)
+    Fixture.once(spark, w,
+        s"embeddings:${emStamp(spark, dir)}:ivfpq-n16-m8-c16-i3-refresh-cellpart-v2") {
       graft.operators.AnnIndex.write(Tables.embeddings(spark, dir),
         "vec_id", "embedding", s"$w/index", nList = 16, m = 8, codes = 16, iters = 3)
-      new java.io.File(w).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -1153,8 +1109,7 @@ object PipelineQueries {
   // ADVICE #2 — a converged retry must not excuse a compaction
   // regression under best-of-two).
   // ---------------------------------------------------------------------
-  private def e13WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e13_${Integer.toHexString(dir.hashCode)}"
+  private def e13WorkDir(dir: String): String = Fixture.workDir("e13", dir)
 
   private val e13Watermark = 6
 
@@ -1177,17 +1132,9 @@ object PipelineQueries {
     * between maintenance windows.
     */
   def e13Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"embeddings:${src.getLen}:${src.getModificationTime}:ivfpq-n16-m8-c16-i3-policy6-cellpart-v4-staged"
     val w = e13WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(w), true)
+    Fixture.once(spark, w,
+        s"embeddings:${emStamp(spark, dir)}:ivfpq-n16-m8-c16-i3-policy6-cellpart-v4-staged") {
       val em = Tables.embeddings(spark, dir)
       graft.operators.AnnIndex.write(em, "vec_id", "embedding", s"$w/index",
         nList = 16, m = 8, codes = 16, iters = 3)
@@ -1208,12 +1155,10 @@ object PipelineQueries {
       // ADVICE #2). The staged copy lets every run REPLAY the gated
       // work from the same pre-watermark state (e12's pristine-store
       // restart-replay convention).
-      graft.operators.Stores.duplicate(
-        fs, new org.apache.hadoop.fs.Path(s"$w/index"),
-        new org.apache.hadoop.fs.Path(s"$w/index_staged"),
-        spark.sparkContext.hadoopConfiguration)
-      new java.io.File(w).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val ix = new org.apache.hadoop.fs.Path(s"$w/index")
+      graft.operators.Stores.duplicate(ix.getFileSystem(hconf), ix,
+        new org.apache.hadoop.fs.Path(s"$w/index_staged"), hconf)
     }
   }
 
@@ -1325,8 +1270,7 @@ object PipelineQueries {
   // the DuckDB oracle hash-gates the append → store read-back → serve →
   // brute → recall-join machinery end to end.
   // ---------------------------------------------------------------------
-  private def s13WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s13_${Integer.toHexString(dir.hashCode)}"
+  private def s13WorkDir(dir: String): String = Fixture.workDir("s13", dir)
 
   /** Feed staging + store publish — load-phase setup (Bench, untimed). */
   def s13Setup(spark: SparkSession, dir: String): Unit =
@@ -1373,8 +1317,7 @@ object PipelineQueries {
   // document's slices reassemble and DECODE to the oracle's direct md5
   // of its normalized text.
   // ---------------------------------------------------------------------
-  private[graft] def s14WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s14_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def s14WorkDir(dir: String): String = Fixture.workDir("s14", dir)
 
   def s14Setup(spark: SparkSession, dir: String): Unit =
     graft.streaming.IngestIdShards.setup(spark, dir, s14WorkDir(dir))
@@ -1439,8 +1382,7 @@ object PipelineQueries {
   // planted copy must be scrubbed and every original survive; the
   // oracle recomputes exhaustive pairs + transitive closure.
   // ---------------------------------------------------------------------
-  private[graft] def vecPairsStoreDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vpairs_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def vecPairsStoreDir(dir: String): String = Fixture.workDir("vpairs", dir)
 
   /** The planted-pair corpus every embedding-space screen cell shares
     * (the e03 convention): the fixture plus its ±2% arithmetic-jitter
@@ -1465,23 +1407,12 @@ object PipelineQueries {
     * input via the fingerprint marker.
     */
   def vecPairsSetup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"embeddings:${src.getLen}:${src.getModificationTime}:hyperlsh8t-c099-vecpairs-v1"
     val st = vecPairsStoreDir(dir)
-    val marker = new java.io.File(s"$st/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(st), true)
+    Fixture.once(spark, st, s"embeddings:${emStamp(spark, dir)}:hyperlsh8t-c099-vecpairs-v1") {
       Dedup.embeddingNearDup(
           e03Corpus(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))),
           "vec_id", "embedding", threshold = 0.99, nTables = 8)
         .write.mode("overwrite").parquet(s"$st/pairs")
-      new java.io.File(st).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -1952,7 +1883,7 @@ object PipelineQueries {
     */
   def io02Setup(spark: SparkSession, dir: String): (String, String) = synchronized {
     val h = Integer.toHexString(dir.hashCode)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_io02_buckets_$h"
+    val base = Fixture.workDir("io02_buckets", dir)
     val oTab = s"graft_orders_bucketed_$h"
     val lTab = s"graft_lineitem_bucketed_$h"
     // prune BEFORE the bucketed write: the downstream join only needs
@@ -1962,22 +1893,9 @@ object PipelineQueries {
     // the marker records the source files' (length, mtime) fingerprint:
     // a regenerated fixture at the same path invalidates the buckets
     // instead of silently serving stale data
-    val marker = new java.io.File(s"$base/_SETUP_DONE")
-    val fingerprint = Seq("orders", "lineitem").map { t =>
-      val f = new java.io.File(s"$dir/$t.parquet")
-      s"$t:${f.length()}:${f.lastModified()}"
-    }.mkString("\n")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (markerFresh) {
-      def register(tab: String, df: DataFrame, key: String, sub: String): Unit =
-        if (!spark.catalog.tableExists(tab))
-          spark.sql(
-            s"CREATE TABLE $tab (${df.schema.toDDL}) USING parquet " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$base/$sub'")
-      register(oTab, orders, "o_orderkey", "orders")
-      register(lTab, lines, "l_orderkey", "lineitem")
-    } else {
+    val fingerprint = Seq("orders", "lineitem")
+      .map(t => s"$t:${Fixture.stamp(spark, s"$dir/$t.parquet")}").mkString("\n")
+    Fixture.once(spark, base, fingerprint) {
       orders.write.mode("overwrite")
         .option("path", s"$base/orders")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -1986,8 +1904,15 @@ object PipelineQueries {
         .option("path", s"$base/lineitem")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(lTab)
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
+    // a fresh session re-attaches the existing bucket files
+    def register(tab: String, df: DataFrame, key: String, sub: String): Unit =
+      if (!spark.catalog.tableExists(tab))
+        spark.sql(
+          s"CREATE TABLE $tab (${df.schema.toDDL}) USING parquet " +
+            s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$base/$sub'")
+    register(oTab, orders, "o_orderkey", "orders")
+    register(lTab, lines, "l_orderkey", "lineitem")
     (oTab, lTab)
   }
 
@@ -2058,8 +1983,7 @@ object PipelineQueries {
   // micro-batches through foreachBatch, pairs appended per batch. The
   // drained log must equal the one-shot screen (same oracle as d14).
   // ---------------------------------------------------------------------
-  private def s06WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s06_${Integer.toHexString(dir.hashCode)}"
+  private def s06WorkDir(dir: String): String = Fixture.workDir("s06", dir)
 
   /** Untimed load-phase setup for Bench: the feed staging and the
     * corpus signature store are published-once ingest artifacts, not
@@ -2081,8 +2005,7 @@ object PipelineQueries {
   // the drained per-doc report must equal the one-shot d16 screen —
   // same oracle.
   // ---------------------------------------------------------------------
-  private def s15WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s15_${Integer.toHexString(dir.hashCode)}"
+  private def s15WorkDir(dir: String): String = Fixture.workDir("s15", dir)
 
   /** Feed staging + eval-gram store publish (load phase, Bench-untimed). */
   def s15Setup(spark: SparkSession, dir: String): Unit =
@@ -2100,8 +2023,7 @@ object PipelineQueries {
   // one-shot d24 — same oracle. The last batch screen without a
   // streaming twin.
   // ---------------------------------------------------------------------
-  private def s16WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s16_${Integer.toHexString(dir.hashCode)}"
+  private def s16WorkDir(dir: String): String = Fixture.workDir("s16", dir)
 
   /** Feed staging + classifier publish (load phase, Bench-untimed). */
   def s16Setup(spark: SparkSession, dir: String): Unit =
@@ -2192,7 +2114,7 @@ object PipelineQueries {
   private def s07(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestPack
       .run(spark, dir,
-        s"${System.getProperty("java.io.tmpdir")}/graft_s07_${Integer.toHexString(dir.hashCode)}")
+        Fixture.workDir("s07", dir))
       .orderBy(col("doc_id"))
 
   // ---------------------------------------------------------------------
@@ -2204,8 +2126,7 @@ object PipelineQueries {
   // gate checks LSH recall AND the exact verification values across the
   // drained 4-micro-batch log.
   // ---------------------------------------------------------------------
-  private def s08WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s08_${Integer.toHexString(dir.hashCode)}"
+  private def s08WorkDir(dir: String): String = Fixture.workDir("s08", dir)
 
   /** Untimed load-phase setup for Bench: feed staging + the corpus
     * sketch store are published-once ingest artifacts (the s06
@@ -2219,8 +2140,7 @@ object PipelineQueries {
       .run(spark, dir, s08WorkDir(dir))
       .orderBy(col("id_batch"), col("id_corpus"))
 
-  private def s11WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s11_${Integer.toHexString(dir.hashCode)}"
+  private def s11WorkDir(dir: String): String = Fixture.workDir("s11", dir)
 
   /** Untimed load-phase setup for Bench: feed staging + the stored
     * corpus vocabulary distribution (the s06/s09 pattern).
@@ -2298,8 +2218,7 @@ object PipelineQueries {
       |JOIN ranked r ON r.source = a.source AND r.rn = 1
       |ORDER BY a.source""".stripMargin
 
-  private def s09WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s09_${Integer.toHexString(dir.hashCode)}"
+  private def s09WorkDir(dir: String): String = Fixture.workDir("s09", dir)
 
   /** Untimed load-phase setup for Bench: feed staging + the corpus
     * model store are published-once ingest artifacts (the s06/s08
@@ -2379,8 +2298,7 @@ object PipelineQueries {
   // median, unseen-bigram smoothing for the batch, and the d18 packing
   // prefix sum over the kept docs.
   // ---------------------------------------------------------------------
-  private def s10WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s10_${Integer.toHexString(dir.hashCode)}"
+  private def s10WorkDir(dir: String): String = Fixture.workDir("s10", dir)
 
   /** Untimed load-phase setup for Bench: feed staging + the signature /
     * LM / threshold stores are published-once ingest artifacts (the
@@ -2847,8 +2765,7 @@ object PipelineQueries {
       |ORDER BY n_nationkey""".stripMargin
 
   private def io03(spark: SparkSession, dir: String): DataFrame = {
-    val dst =
-      s"${System.getProperty("java.io.tmpdir")}/graft_io03_${Integer.toHexString(dir.hashCode)}"
+    val dst = Fixture.workDir("io03", dir)
     graft.operators.Compact
       .parquet(spark, s"$dir/documents.parquet", dst, Seq(col("doc_id")))
       .orderBy(col("doc_id"))
@@ -2872,8 +2789,7 @@ object PipelineQueries {
   // assertions live in PackSpec; this gate pins data preservation.
   // ---------------------------------------------------------------------
   private def io05(spark: SparkSession, dir: String): DataFrame = {
-    val wd =
-      s"${System.getProperty("java.io.tmpdir")}/graft_io05_${Integer.toHexString(dir.hashCode)}"
+    val wd = Fixture.workDir("io05", dir)
     val logDir = s"$wd/slices"
     val shardDir = s"$wd/shards"
     val fs = new org.apache.hadoop.fs.Path(wd)
@@ -2944,29 +2860,19 @@ object PipelineQueries {
   // migration itself: two exchanges, no prefix sum, offsets read from
   // the store.
   // ---------------------------------------------------------------------
-  private def io06WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io06_${Integer.toHexString(dir.hashCode)}"
+  private def io06WorkDir(dir: String): String = Fixture.workDir("io06", dir)
 
   /** Publish the source-of-truth shard store at the OLD budget (load
     * phase, Bench-untimed; fingerprinted per input).
     */
   def io06Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"documents:${src.getLen}:${src.getModificationTime}:reshard-ws-b256-s16-v1"
     val w = io06WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    Fixture.once(spark, w, s"documents:${docStamp(spark, dir)}:reshard-ws-b256-s16-v1") {
       Pack.writeShardsTokens(
         Tables.documents(spark, dir)
           .select(col("doc_id"), Text.tokens(col("text")).as("toks")),
         "doc_id", "toks", seqTokens = 256, seqsPerShard = 16,
         outDir = s"$w/shards_256")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -3097,8 +3003,7 @@ object PipelineQueries {
   // masked token all break the hash) and pins the policy contract as a
   // literal row: generation 2, registry 0, fired pattern w1=0,w2=1.
   // ---------------------------------------------------------------------
-  private def io09WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io09_${Integer.toHexString(dir.hashCode)}"
+  private def io09WorkDir(dir: String): String = Fixture.workDir("io09", dir)
 
   /** Publish the PRISTINE pre-window store once, STAGED ASIDE — the
     * timed cell mutates its live copy, so every run (first, retry, warm
@@ -3107,31 +3012,19 @@ object PipelineQueries {
     * fingerprinted per input.
     */
   def io09Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"documents:${src.getLen}:${src.getModificationTime}:repack-ws-b256-s16-w15-v1"
     val w = io09WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      // a stale marker means the input corpus changed: the DERIVED live
-      // copies (io09's store, io10's store_serve) were built from the
-      // OLD staged store, and their own restore predicates check only
-      // generation/registry state — they cannot see a fingerprint
-      // change, so they must be invalidated here with the staging
-      // rewrite (r20 ADVICE #1: a prior run's gen-1 store_serve was
-      // reused over a new corpus and served stale data)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$w/store"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$w/store_serve"), true)
+    // a stale marker means the input corpus changed: the rebuild's wipe
+    // of `w` also drops the DERIVED live copies (io09's store, io10's
+    // store_serve), whose own restore predicates check only
+    // generation/registry state and cannot see a fingerprint change
+    // (r20 ADVICE #1: a prior run's gen-1 store_serve was reused over a
+    // new corpus and served stale data)
+    Fixture.once(spark, w, s"documents:${docStamp(spark, dir)}:repack-ws-b256-s16-w15-v1") {
       Pack.writeShardsTokens(
         Tables.documents(spark, dir)
           .select(col("doc_id"), Text.tokens(col("text")).as("toks")),
         "doc_id", "toks", seqTokens = 256, seqsPerShard = 16,
         outDir = s"$w/store_staged")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -3449,8 +3342,7 @@ object PipelineQueries {
   private def d39(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val model = Bpe.train(docs, "text", numMerges = 256, topWords = 20000)
-    val out =
-      s"${System.getProperty("java.io.tmpdir")}/graft_d39_${Integer.toHexString(dir.hashCode)}"
+    val out = Fixture.workDir("d39", dir)
     Pack.writeShardsTokens(
       docs.select(col("doc_id"), Bpe.encodeIdStream(model, col("text")).as("ids")),
       "doc_id", "ids", seqTokens = 512, seqsPerShard = 16, outDir = out)
@@ -3991,8 +3883,7 @@ object PipelineQueries {
   // Scale shape: the signal store is one narrow row per doc; the median
   // is one broadcast scalar; the sample's per-stratum sort is O(quota).
   // ---------------------------------------------------------------------
-  private[graft] def p02StoreDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p02_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def p02StoreDir(dir: String): String = Fixture.workDir("p02", dir)
 
   /** One-time publish of the per-doc quality signals (span-duplication
     * ratio + corpus-LM score) — load-phase setup, Bench untimed.
@@ -4000,17 +3891,8 @@ object PipelineQueries {
     * LM train and LM score (the round-12 shared-token discipline).
     */
   def p02Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"documents:${src.getLen}:${src.getModificationTime}:span8-lm0.5-signals-v1"
     val st = p02StoreDir(dir)
-    val marker = new java.io.File(s"$st/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(st), true)
+    Fixture.once(spark, st, s"documents:${docStamp(spark, dir)}:span8-lm0.5-signals-v1") {
       val toks = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), Text.tokens(col("text")).as("a"))
         .localCheckpoint(true)
@@ -4024,8 +3906,6 @@ object PipelineQueries {
         .join(spans, Seq("doc_id"))
         .join(lm, Seq("doc_id"))
         .write.mode("overwrite").parquet(s"$st/signals")
-      new java.io.File(st).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -4142,17 +4022,13 @@ object PipelineQueries {
   // two-phase prefix machinery on narrow relations over the published
   // parquet, and the pack stage is the d22 emit.
   // ---------------------------------------------------------------------
-  private[graft] def p03ShardDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p03_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def p03ShardDir(dir: String): String = Fixture.workDir("p03", dir)
 
-  private[graft] def p04ShardDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p04_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def p04ShardDir(dir: String): String = Fixture.workDir("p04", dir)
 
-  private[graft] def p05ShardDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p05_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def p05ShardDir(dir: String): String = Fixture.workDir("p05", dir)
 
-  private[graft] def curationStoreDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cur_${Integer.toHexString(dir.hashCode)}"
+  private[graft] def curationStoreDir(dir: String): String = Fixture.workDir("cur", dir)
 
   /** Bump when the published-front layout or any stage parameter
     * changes (the setup-fingerprint convention).
@@ -4174,16 +4050,8 @@ object PipelineQueries {
     * (length, mtime, format) fingerprint marker.
     */
   def p0345Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$curationStoreFormat"
     val st = curationStoreDir(dir)
-    val marker = new java.io.File(s"$st/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(st), true)
+    Fixture.once(spark, st, s"documents:${docStamp(spark, dir)}:$curationStoreFormat") {
       curationKept(spark, dir).write.mode("overwrite").parquet(s"$st/kept")
       val kept = spark.read.parquet(s"$st/kept")
       val evalDocs = Tables.documents(spark, dir)
@@ -4192,8 +4060,6 @@ object PipelineQueries {
       graft.operators.Decontaminate
         .contaminatedIdsTokens(kept, "doc_id", "jetons", evalDocs, "texte", n = 5)
         .write.mode("overwrite").parquet(s"$st/contaminated")
-      new java.io.File(st).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -4568,8 +4434,7 @@ object PipelineQueries {
   // probe is a bounded 32-query sample, and the text tier's read-back
   // is budget-bounded store rows — the corpus crosses no exchange.
   // ---------------------------------------------------------------------
-  private def p09WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p09_${Integer.toHexString(dir.hashCode)}"
+  private def p09WorkDir(dir: String): String = Fixture.workDir("p09", dir)
 
   /** The vector store's append watermark: three maintaining hops land in
     * setup (counters 1..3), the timed window's fourth append crosses.
@@ -4588,18 +4453,9 @@ object PipelineQueries {
     * against. Load-phase setup (untimed, the store-publish convention).
     */
   def p09Setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
-    def st(f: String) = fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$f"))
-    val d = st("documents.parquet"); val e = st("embeddings.parquet")
-    val fingerprint = s"${d.getLen}:${d.getModificationTime}:" +
-      s"${e.getLen}:${e.getModificationTime}:p09-composedloop-v4-manifest" // v4: fin in store logs
     val w = p09WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(w), true)
+    Fixture.once(spark, w, s"${docStamp(spark, dir)}:${emStamp(spark, dir)}:" +
+        "p09-composedloop-v4-manifest") { // v4: fin in store logs
       val em = Tables.embeddings(spark, dir)
       val emMax = em.agg(coalesce(max(col("vec_id")), lit(0L))).collect()(0).getLong(0)
       // the loop's corpus: the embedding-covered id range (see header)
@@ -4648,18 +4504,15 @@ object PipelineQueries {
       // the politique row reads its depth from here, so an un-fired
       // fold surfaces as a 3-layer manifest → depth 3 ≠ the oracle's
       // pinned 1 → hash mismatch (a gate, not a setup crash)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$w/_FINAL_CHAIN"),
-        finalChain.mkString("\n").getBytes)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$w/_PREV_HEAD"),
-        chain.head.getBytes)
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$w/_T3"),
-        t3.toString.getBytes)
+      Fixture.write(spark, s"$w/_FINAL_CHAIN", finalChain.mkString("\n"))
+      Fixture.write(spark, s"$w/_PREV_HEAD", chain.head)
+      Fixture.write(spark, s"$w/_T3", t3.toString)
       // stage the fragmented pre-window vector store (counter 3) for
       // re-run parity — the e13 convention
-      graft.operators.Stores.duplicate(
-        fs, new org.apache.hadoop.fs.Path(ix),
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val ixPath = new org.apache.hadoop.fs.Path(ix)
+      graft.operators.Stores.duplicate(ixPath.getFileSystem(hconf), ixPath,
         new org.apache.hadoop.fs.Path(s"$w/index_staged"), hconf)
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -4669,8 +4522,7 @@ object PipelineQueries {
     val ix = s"$w/index"
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(w).getFileSystem(hconf)
-    def readFile(f: String) = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$w/$f"))).trim
+    def readFile(f: String) = Fixture.read(spark, s"$w/$f").trim
     val finalChain = readFile("_FINAL_CHAIN").split("\n").toSeq
     val finalLayer = finalChain.head
     val prevHead = readFile("_PREV_HEAD")
@@ -4866,32 +4718,22 @@ object PipelineQueries {
   // bounded store rows; the corpus appears ONLY through the gen-2
   // artifacts setup built — nothing here exchanges corpus-scale data.
   // ---------------------------------------------------------------------
-  private def p07WorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p07_${Integer.toHexString(dir.hashCode)}"
+  private def p07WorkDir(dir: String): String = Fixture.workDir("p07", dir)
 
   private val p07Pad = "<scrub>"
 
   def p07Setup(spark: SparkSession, dir: String): Unit = synchronized {
     RefreshPipeline.setup(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mtime(f: String) = fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$f"))
-    val d = mtime("documents.parquet"); val e = mtime("embeddings.parquet")
+    val w = p07WorkDir(dir)
     // bump the trailing tag when the p06 store layout (RefreshPipeline
     // `format`) or any published-store convention here changes
-    val fingerprint = s"${d.getLen}:${d.getModificationTime}:" +
-      s"${e.getLen}:${e.getModificationTime}:p07-threetier-cellpart-v3" // v3: fin in media log
-    val w = p07WorkDir(dir)
-    val marker = new java.io.File(s"$w/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(w), true)
+    Fixture.once(spark, w, s"${docStamp(spark, dir)}:${emStamp(spark, dir)}:" +
+        "p07-threetier-cellpart-v3") { // v3: fin in media log
       val docs = Tables.documents(spark, dir)
       // the delta source: ONE materialized hop-2 refresh into p07's own
       // generation dir (p06's gen2 is rebuilt by every timed p06 run —
       // this cell must own a stable copy)
-      val t2 = RefreshPipeline.publishedThreshold(RefreshPipeline.gen1Dir(dir))
+      val t2 = RefreshPipeline.publishedThreshold(spark, RefreshPipeline.gen1Dir(dir))
       RefreshPipeline.refreshGen(spark,
         Seq(RefreshPipeline.gen1Dir(dir), RefreshPipeline.gen0Dir(dir)),
         docs.filter(col("doc_id") > t2), s"$w/gen2", threshold = t2)
@@ -4912,15 +4754,13 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(s"$w/media/log")
       Pack.finalizeSliceLog(spark, s"$w/media/log", s"$w/media/shards", 256, 8,
         numPartitions = 1)
-      new java.io.File(w).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
   private def p07(spark: SparkSession, dir: String): DataFrame = {
     p07Setup(spark, dir)
     val w = p07WorkDir(dir)
-    val t2 = RefreshPipeline.publishedThreshold(RefreshPipeline.gen1Dir(dir))
+    val t2 = RefreshPipeline.publishedThreshold(spark, RefreshPipeline.gen1Dir(dir))
     val sel1 = spark.read
       .parquet(s"${RefreshPipeline.gen1Dir(dir)}/selection").select(col("doc_id"))
     val sel2full = spark.read.parquet(s"$w/gen2/selection")
@@ -5529,8 +5369,7 @@ object PipelineQueries {
   // annotation said so.
   // ---------------------------------------------------------------------
   private def d22(spark: SparkSession, dir: String): DataFrame = {
-    val out =
-      s"${System.getProperty("java.io.tmpdir")}/graft_d22_${Integer.toHexString(dir.hashCode)}"
+    val out = Fixture.workDir("d22", dir)
     Pack.writeShards(Tables.documents(spark, dir), "doc_id", "text",
       seqTokens = 1024, seqsPerShard = 16, outDir = out)
     val seqs = Pack.readShards(spark, out)

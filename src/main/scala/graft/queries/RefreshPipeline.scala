@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Fixture
 import graft.functions.Text
 import graft.operators.{Curate, Decontaminate, Dedup, Pack, Stores}
 
@@ -123,8 +124,7 @@ private[graft] object RefreshPipeline {
   /** Bump when any published-store layout or convention changes. */
   private val format = "p06-refresh-v5-chained" // v5: slice logs persist `fin`
 
-  def workDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p06_${Integer.toHexString(dir.hashCode)}"
+  def workDir(dir: String): String = Fixture.workDir("p06", dir)
 
   def gen0Dir(dir: String): String = s"${workDir(dir)}/gen0"
   def gen1Dir(dir: String): String = s"${workDir(dir)}/gen1"
@@ -146,15 +146,11 @@ private[graft] object RefreshPipeline {
     * the generation ("conserve" in the refresh report), higher ids
     * arrive as batches. Written when the generation is published.
     */
-  private[graft] def publishedThreshold(genDir: String): Long =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$genDir/_SPLIT_T"))).trim.toLong
+  private[graft] def publishedThreshold(spark: SparkSession, genDir: String): Long =
+    Fixture.read(spark, s"$genDir/_SPLIT_T").trim.toLong
 
-  private def writeThreshold(genDir: String, t: Long): Unit = {
-    new java.io.File(genDir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$genDir/_SPLIT_T"), t.toString.getBytes)
-  }
+  private def writeThreshold(spark: SparkSession, genDir: String, t: Long): Unit =
+    Fixture.write(spark, s"$genDir/_SPLIT_T", t.toString)
 
   // -------------------------------------------------------------------
   // publish — one-time generation-0 build (load-phase setup: in
@@ -164,16 +160,8 @@ private[graft] object RefreshPipeline {
 
   /** Idempotent per input via the (length, mtime, format) fingerprint. */
   def setup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$format"
-    val work = workDir(dir)
-    val marker = new java.io.File(s"$work/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(work), true)
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$format"
+    Fixture.once(spark, workDir(dir), fingerprint) {
       val docs = graft.sources.Tables.documents(spark, dir)
       val mx = docs.agg(coalesce(max(col("doc_id")), lit(0L))).collect()(0).getLong(0)
       // corpus = gen-0, batch-1 = (t1, t2], batch-2 = (t2, max]: the
@@ -184,15 +172,13 @@ private[graft] object RefreshPipeline {
       val t1 = 8L * mx / 10L
       val t2 = 9L * mx / 10L
       publish(spark, docs.filter(col("doc_id") <= t1), gen0Dir(dir))
-      writeThreshold(gen0Dir(dir), t1)
+      writeThreshold(spark, gen0Dir(dir), t1)
       // generation 1 = ONE FULL MAINTAINING REFRESH of batch-1: the
       // hop whose published stores the timed refresh will probe — the
       // chain that makes run() certify refresh ∘ refresh ≡ one-shot
       refreshGen(spark, Seq(gen0Dir(dir)),
         docs.filter(col("doc_id") > t1 && col("doc_id") <= t2),
         gen1Dir(dir), threshold = t1, maintainThreshold = Some(t2))
-      new java.io.File(work).mkdirs()
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 
@@ -323,7 +309,7 @@ private[graft] object RefreshPipeline {
     Stores.duplicate(
       fs, new org.apache.hadoop.fs.Path(s"${layers.head}/store"),
       new org.apache.hadoop.fs.Path(s"$outDir/store"), conf)
-    writeThreshold(outDir, publishedThreshold(layers.head))
+    writeThreshold(spark, outDir, publishedThreshold(spark, layers.head))
   }
 
   // -------------------------------------------------------------------
@@ -385,16 +371,14 @@ private[graft] object RefreshPipeline {
   // boundary is the same ⌊9·max/10⌋)
   // -------------------------------------------------------------------
 
-  def policyWorkDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_p08_${Integer.toHexString(dir.hashCode)}"
+  def policyWorkDir(dir: String): String = Fixture.workDir("p08", dir)
 
   /** The layer chain the policy loop left live, persisted by
     * [[policySetup]] (newest first, one dir per line) — what a
     * production deployment's generation manifest records.
     */
-  private def readChain(work: String): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$work/_CHAIN"))).trim.split("\n").toSeq
+  private def readChain(spark: SparkSession, work: String): Seq[String] =
+    Fixture.read(spark, s"$work/_CHAIN").trim.split("\n").toSeq
 
 
   /** Publish gen-0 over doc_id ≤ ⌊6·max/10⌋, then run THREE policy-
@@ -406,31 +390,22 @@ private[graft] object RefreshPipeline {
     * store-publish convention; the fold is maintenance-cadence work).
     */
   def policySetup(spark: SparkSession, dir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint =
-      s"documents:${src.getLen}:${src.getModificationTime}:$format:policy-d$CompactDepth-v1"
     val work = policyWorkDir(dir)
-    val marker = new java.io.File(s"$work/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
-      fs.delete(new org.apache.hadoop.fs.Path(work), true)
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:" +
+      s"$format:policy-d$CompactDepth-v1"
+    Fixture.once(spark, work, fingerprint) {
       val docs = graft.sources.Tables.documents(spark, dir)
       val mx = docs.agg(coalesce(max(col("doc_id")), lit(0L))).collect()(0).getLong(0)
       def t(frac: Int) = frac.toLong * mx / 10L
       publish(spark, docs.filter(col("doc_id") <= t(6)), s"$work/g0")
-      writeThreshold(s"$work/g0", t(6))
+      writeThreshold(spark, s"$work/g0", t(6))
       var chain: Seq[String] = Seq(s"$work/g0")
       (1 to 3).foreach { h =>
         chain = maintainedRefresh(spark, chain,
           docs.filter(col("doc_id") > t(5 + h) && col("doc_id") <= t(6 + h)),
           s"$work/g$h", threshold = t(5 + h), newThreshold = t(6 + h))
       }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$work/_CHAIN"), chain.mkString("\n").getBytes)
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
+      Fixture.write(spark, s"$work/_CHAIN", chain.mkString("\n"))
     }
   }
 
@@ -441,8 +416,8 @@ private[graft] object RefreshPipeline {
   def runPolicy(spark: SparkSession, dir: String): DataFrame = {
     policySetup(spark, dir)
     val work = policyWorkDir(dir)
-    val chain = readChain(work)
-    val t3 = publishedThreshold(chain.head)
+    val chain = readChain(spark, work)
+    val t3 = publishedThreshold(spark, chain.head)
     val batch = graft.sources.Tables.documents(spark, dir).filter(col("doc_id") > t3)
     refreshGen(spark, chain, batch, s"$work/gen_final", threshold = t3)
   }
@@ -854,7 +829,7 @@ private[graft] object RefreshPipeline {
       Dedup.bandIndex(allSigs, SigK, Bands,
           hotBuckets = Some(spark.read.parquet(s"$outDir/hot")), narrow = true)
         .write.mode("overwrite").parquet(s"$outDir/bands")
-      writeThreshold(outDir, newT)
+      writeThreshold(spark, outDir, newT)
       mark("maintain_stores")
     }
 
@@ -884,7 +859,7 @@ private[graft] object RefreshPipeline {
     */
   def run(spark: SparkSession, dir: String): DataFrame = {
     setup(spark, dir)
-    val t2 = publishedThreshold(gen1Dir(dir))
+    val t2 = publishedThreshold(spark, gen1Dir(dir))
     val batch = graft.sources.Tables.documents(spark, dir).filter(col("doc_id") > t2)
     refreshGen(spark, Seq(gen1Dir(dir), gen0Dir(dir)), batch, gen2Dir(dir),
       threshold = t2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
+import graft.engine.Fixture
 import graft.etl.Star
 import graft.measures.{Filters, Measures}
 
@@ -100,8 +101,7 @@ object WarehouseQueries {
   // IS that batch SQL, so re-runnability/idempotence of the incremental
   // path is hash-gated, not just spec-asserted.
   // ---------------------------------------------------------------------
-  private def etl04Target(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_etl04_${Integer.toHexString(dir.hashCode)}"
+  private def etl04Target(dir: String): String = Fixture.workDir("etl04", dir)
 
   /** Untimed load-phase setup, declared on etl04's cell (the io02Setup
     * pattern): stage the 4-file feed once so the measured etl04 is the incremental

@@ -5,6 +5,7 @@ import scala.collection.mutable.ListBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 
 /** Streaming incremental warehouse load (SURVEY §2.9): the reference's
   * re-runnable ON CONFLICT ETL re-expressed as a Structured Streaming
@@ -74,20 +75,24 @@ object IncrementalEtl {
   def run(spark: SparkSession, dir: String, targetDir: String): DataFrame =
     runWithStats(spark, dir, targetDir)._1
 
+  /** Bump when the feed staging below changes: the fixture fingerprint
+    * carries it beside the `orders` stamp, so a changed source or staging
+    * scheme re-stages instead of replaying the old feed.
+    */
+  private val feedFormat = "orders-range4-mtime-v1"
+
   /** Stage the feed as 4 contiguous DATE RANGES (the realistic arrival
     * order — a month's orders land together), so micro-batches overlap
     * few partitions and the partition-scoped merge has something to
-    * skip. Idempotent (skips when already staged): this is test-harness
-    * plumbing standing in for files that simply ARRIVE in production,
-    * so Bench runs it untimed as load-phase setup, like io02's bucketed
-    * table.
+    * skip. Idempotent per input (a [[graft.engine.Fixture]] on the feed
+    * dir): this is test-harness plumbing standing in for files that
+    * simply ARRIVE in production, so Bench runs it untimed as load-phase
+    * setup, like io02's bucketed table.
     */
   def stageFeed(spark: SparkSession, dir: String, targetDir: String): Unit = {
     val feedDir = s"$targetDir/feed"
-    val feedPath = new org.apache.hadoop.fs.Path(feedDir)
-    val done = new org.apache.hadoop.fs.Path(s"$feedDir/_STAGED")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) {
+    val fingerprint = s"orders:${Fixture.stamp(spark, s"$dir/orders.parquet")}:$feedFormat"
+    Fixture.once(spark, feedDir, fingerprint) {
       // one range-partitioned write, then the part files are republished
       // with STRICTLY INCREASING mtimes in range order: the file stream
       // source orders its triggers by modification time, and a single
@@ -95,15 +100,16 @@ object IncrementalEtl {
       // pairing to a filesystem tie-break that varies by box (observed:
       // ranges paired (1,3)(2,4) on one VM, tripling the month-boundary
       // overlaps the spec bounds). Date-ordered ARRIVAL is the feed
-      // contract, so the staging must actually encode it.
-      val staging = new org.apache.hadoop.fs.Path(s"$targetDir/feed_stage")
-      fs.delete(staging, true)
-      fs.delete(feedPath, true)
+      // contract, so the staging must actually encode it. The staging
+      // dir sits inside the feed dir, hidden from the stream source by
+      // its `_` prefix, so the build writes only under the fixture.
+      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
+      val staging = new org.apache.hadoop.fs.Path(feedPath, "_staging")
+      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       spark.read.parquet(s"$dir/orders.parquet")
         .select(orderSchema.fieldNames.map(col): _*)
         .repartitionByRange(4, col("o_orderdate"))
         .write.mode("overwrite").parquet(staging.toString)
-      fs.mkdirs(feedPath)
       val parts = fs.listStatus(staging).map(_.getPath)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val base = System.currentTimeMillis() - parts.length * 60000L
@@ -113,7 +119,6 @@ object IncrementalEtl {
         fs.setTimes(dst, base + i * 60000L, -1)
       }
       fs.delete(staging, true)
-      fs.create(done, true).close()
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.operators.AnnIndex
 
 /** ANN recall-drift monitor (§2.9 composed with the e08/e09 store) —
@@ -106,21 +107,14 @@ object IngestAnnDrift {
     * format) fingerprint marker; Bench runs this untimed.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"embeddings:${src.getLen}:${src.getModificationTime}:$format"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"embeddings:${Fixture.stamp(spark, s"$dir/embeddings.parquet")}:$format"
+    Fixture.once(spark, workDir, fingerprint) {
       val em = spark.read.schema(emSchema).parquet(s"$dir/embeddings.parquet")
       batchFeed(em)
         .repartition(4, col("lot"))
         .write.mode("overwrite").parquet(s"$workDir/feed")
       AnnIndex.write(em, "vec_id", "embedding", s"$workDir/index",
         nList = NList, m = M, codes = Codes, iters = Iters)
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

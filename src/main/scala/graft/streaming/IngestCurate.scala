@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.operators.{Dedup, LangModel, Pack}
 
 /** The COMPOSED streaming ingest pipeline (§2.9 — the production shape;
@@ -62,14 +63,8 @@ object IngestCurate {
     * input via the (length, mtime, format) fingerprint marker.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$curFormat"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$curFormat"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       val feedDir = s"$workDir/feed"
       docs.filter(isBatch)
@@ -79,7 +74,9 @@ object IngestCurate {
       // strictly increasing mtimes in range order (the IngestPack
       // pattern): FileStreamSource replays oldest-first, and packing is
       // order-sensitive
-      val parts = fs.listStatus(new org.apache.hadoop.fs.Path(feedDir))
+      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
+      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val parts = fs.listStatus(feedPath)
         .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val base = System.currentTimeMillis() - 60000L * parts.length
       parts.zipWithIndex.foreach { case (p, i) => fs.setTimes(p, base + i * 60000L, -1) }
@@ -103,7 +100,6 @@ object IngestCurate {
       import spark.implicits._
       Seq((model.vocabSize, model.k, med)).toDF("v", "k", "med")
         .coalesce(1).write.mode("overwrite").parquet(s"$workDir/model_meta")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.functions.Text
 import graft.operators.Decontaminate
 
@@ -61,14 +62,8 @@ object IngestDecon {
     * Idempotent per input via the (length, mtime, format) fingerprint.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$format"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$format"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       docs.filter(!isEval)
         .repartition(4, pmod(col("doc_id"), lit(4)))
@@ -77,7 +72,6 @@ object IngestDecon {
         .select(explode(Text.shingles(col("text"), N)).as("g"))
         .distinct()
         .write.mode("overwrite").parquet(s"$workDir/eval_grams")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.operators.Dedup
 
 /** Streaming ingestion screen (SURVEY §2.9 composed with the dedup
@@ -55,18 +56,8 @@ object IngestDedup {
   private val sigFormat = "minhash-shingle3-k64-v2"
 
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    // hadoop FS status, not java.io.File: the latter silently returns
-    // 0:0 for non-local URIs, freezing the fingerprint forever; the FS
-    // is resolved FROM the path (not the default FS) so an s3a:// dir
-    // doesn't throw Wrong-FS
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$sigFormat"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$sigFormat"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       // the feed arrives as 4 files → 4 micro-batches
       docs.filter(isBatch)
@@ -80,7 +71,6 @@ object IngestDedup {
       // corpus-band exchange per trigger
       Dedup.hotBandBuckets(spark.read.parquet(s"$workDir/corpus_sigs"))
         .write.mode("overwrite").parquet(s"$workDir/corpus_hot_bb")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 
 /** Streaming ingest DRIFT monitor (§2.9 composed with the d37 selector):
   * arriving document micro-batches are screened per source against the
@@ -72,14 +73,8 @@ object IngestDrift {
     * Bench runs this untimed.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$format"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$format"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       batchFeed(docs)
         .repartition(4, col("source"))
@@ -92,7 +87,6 @@ object IngestDrift {
         .limit(topK)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$workDir/vocab")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

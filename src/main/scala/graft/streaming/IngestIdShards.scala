@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.functions.{Bpe, Text}
 import graft.operators.Pack
 
@@ -72,28 +73,23 @@ object IngestIdShards {
     * persist, freeze. Idempotent per input via the fingerprint marker.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$format"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$format"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       val feedDir = s"$workDir/feed"
       docs
         .repartitionByRange(4, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
         .write.mode("overwrite").parquet(feedDir)
-      val parts = fs.listStatus(new org.apache.hadoop.fs.Path(feedDir))
+      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
+      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val parts = fs.listStatus(feedPath)
         .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
       val base = System.currentTimeMillis() - 60000L * parts.length
       parts.zipWithIndex.foreach { case (p, i) => fs.setTimes(p, base + i * 60000L, -1) }
       Bpe.writeModel(spark,
         Bpe.train(docs, "text", numMerges = NumMerges, topWords = TopWords),
         s"$workDir/tokenizer")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

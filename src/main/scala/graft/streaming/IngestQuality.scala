@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.operators.LangModel
 
 /** Streaming ingest QUALITY screen (§2.9 composed with the LM tier):
@@ -66,14 +67,8 @@ object IngestQuality {
     * via the (length, mtime, format) fingerprint marker.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"documents:${src.getLen}:${src.getModificationTime}:$lmFormat"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$lmFormat"
+    Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
       batchFeed(docs)
         .repartition(4, pmod(col("doc_id"), lit(4)))
@@ -84,7 +79,6 @@ object IngestQuality {
       import spark.implicits._
       Seq((model.vocabSize, model.k)).toDF("v", "k")
         .coalesce(1).write.mode("overwrite").parquet(s"$workDir/model_meta")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixture
 import graft.operators.Dedup
 
 /** Streaming SEMANTIC ingestion screen (§2.9 composed with the
@@ -76,21 +77,14 @@ object IngestSemantic {
     * fingerprint marker.
     */
   def setup(spark: SparkSession, dir: String, workDir: String): Unit = synchronized {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = fs.getFileStatus(srcPath)
-    val fingerprint = s"embeddings:${src.getLen}:${src.getModificationTime}:$skFormat"
-    val marker = new java.io.File(s"$workDir/_SETUP_DONE")
-    val markerFresh = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath)) == fingerprint
-    if (!markerFresh) {
+    val fingerprint = s"embeddings:${Fixture.stamp(spark, s"$dir/embeddings.parquet")}:$skFormat"
+    Fixture.once(spark, workDir, fingerprint) {
       val em = spark.read.schema(emSchema).parquet(s"$dir/embeddings.parquet")
       batchFeed(em)
         .repartition(4, pmod(col("vec_id"), lit(4)))
         .write.mode("overwrite").parquet(s"$workDir/feed")
       Dedup.vectorSketches(em, "vec_id", "embedding", corpusBits(spark, dir), NTables)
         .write.mode("overwrite").parquet(s"$workDir/corpus_sketches")
-      java.nio.file.Files.write(marker.toPath, fingerprint.getBytes)
     }
   }
 

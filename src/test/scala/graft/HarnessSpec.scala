@@ -36,17 +36,49 @@ class HarnessSpec extends SparkSpec {
     assert(!run.ok && run.shuffleWriteBytes == 0L)
   }
 
-  test("only engine/Session.scala builds a SparkSession or reads SPARK_GRAFT_CPUS") {
+  /** Every main source file: (path relative to the repo root, text). */
+  private lazy val sources: Seq[(String, String)] = {
     val main = new java.io.File("src/main/scala")
     assert(main.isDirectory, s"src/main/scala not found from ${new java.io.File(".").getAbsolutePath}")
-    val sources = java.nio.file.Files.walk(main.toPath).iterator().asScala
+    java.nio.file.Files.walk(main.toPath).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      .toSeq
+      .toSeq.sortBy(_._1)
+  }
+
+  private def filesContaining(needle: String): Seq[String] =
+    sources.collect { case (path, src) if src.contains(needle) => path }
+
+  test("only engine/Session.scala builds a SparkSession or reads SPARK_GRAFT_CPUS") {
     val builders = sources.filter { case (_, src) => "SparkSession\\s*\\.\\s*builder".r.findFirstIn(src).nonEmpty }
     val cpusReads = sources.filter { case (_, src) => src.contains("\"SPARK_GRAFT_CPUS\"") }
     val factory = "src/main/scala/graft/engine/Session.scala"
     assert(builders.map(_._1) == Seq(factory), s"SparkSession.builder outside the factory: ${builders.map(_._1)}")
     assert(cpusReads.map(_._1) == Seq(factory), s"SPARK_GRAFT_CPUS read outside the factory: ${cpusReads.map(_._1)}")
+  }
+
+  test("fixture markers and work dirs exist only in engine/Fixture.scala") {
+    val fixture = "src/main/scala/graft/engine/Fixture.scala"
+    assert(filesContaining("_SETUP_DONE") == Seq(fixture))
+    assert(filesContaining("markerFresh").isEmpty)
+    // the only other tmpdir paths are timed outputs, not fixtures
+    val outputs = Seq("graft_io01_copy", "graft_w01_events", "graft_filmdb_copy")
+    val tmpdirUses = for {
+      (path, src) <- sources if path != fixture
+      line <- src.linesIterator if line.contains("getProperty(\"java.io.tmpdir\")")
+      if !outputs.exists(line.contains)
+    } yield s"$path: ${line.trim}"
+    assert(tmpdirUses.isEmpty, s"work dir outside Fixture.workDir: $tmpdirUses")
+  }
+
+  test("java.nio.file and java.io.File appear in main only on the pinned local-disk paths") {
+    val allowed = Seq(
+      "src/main/scala/graft/Bench.scala", // the committed baseline read
+      "src/main/scala/graft/Verify.scala", // result and oracle SQL output
+      "src/main/scala/graft/filmdb/FilmDb.scala", // the reference dump read
+      "src/main/scala/graft/operators/Stores.scala", // hard links
+      "src/main/scala/graft/tools/ExplainAll.scala") // plan output
+    val users = (filesContaining("java.nio.file") ++ filesContaining("new java.io.File")).distinct.sorted
+    assert(users.forall(allowed.contains), s"local-disk calls outside the allow-list: ${users.diff(allowed)}")
   }
 }

@@ -128,7 +128,7 @@ class RefreshSpec extends SparkSpec {
       assert(spark.read.parquet(s"$gen1/sigs")
         .select("doc_id").collect().map(_.getLong(0)).toSet == Set(85L),
         "gen-1 sig layer must hold ONLY the batch-1 delta")
-      assert(RefreshPipeline.publishedThreshold(gen1) == 90L)
+      assert(RefreshPipeline.publishedThreshold(spark, gen1) == 90L)
       assert(spark.read.parquet(s"$gen1/stats")
         .select("doc_id").collect().map(_.getLong(0)).toSet ==
         Set(1L, 2L, 3L, 4L, 10L, 11L, 70L, 85L),
