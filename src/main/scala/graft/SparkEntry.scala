@@ -11,9 +11,6 @@ import graft.queries.{EventsQueries, PipelineQueries, Q, RelationalQueries, Ware
   */
 object SparkEntry {
 
-  private def catalog: Seq[Q] =
-    RelationalQueries.all ++ EventsQueries.all ++ PipelineQueries.all ++ WarehouseQueries.all
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.all
@@ -21,34 +18,27 @@ object SparkEntry {
       .get
       .run(spark, "/root/testdata/sf0.001")
 
-  /** The catalog cells as served, in catalog order: each `run` is the
-    * frame [[queries]] serves, and each cell keeps its declared setups
-    * (the harnesses run those untimed before the cell).
+  /** The catalog cells, in catalog order, served exactly as written:
+    * each `run` is the frame [[queries]] serves, and each cell keeps its
+    * declared setups (the harnesses run those untimed before the cell).
     *
-    * Only the cells of `RelationalQueries.all` (q01–q22, q28) keep their
-    * trailing sort. Every other cell, including q23–q27 and q29–q32,
-    * serves through
-    * [[org.apache.spark.sql.graft.PlanOps.dropPresentationSort]]: the
-    * cells' trailing `orderBy`s are presentation-only (the driver's
-    * gate hashes SORTED rows — order is unobservable), and each one
-    * cost a range-sampling job + a full output exchange + a sort on
-    * the timed path (guide §2.4). The relational cells keep theirs: they
-    * order bounded aggregate outputs (cheap), mirror the reference's
-    * dashboard SQL, and RelationalInvariantsSpec asserts row-order
-    * properties (pareto cumulative, date spine, month-over-month) on
-    * the served frames. PlanSpec pins this boundary.
+    * Row order is part of a cell's source, not of this surface. Only the
+    * cells of `RelationalQueries.all` (q01–q22, q28) end in a global
+    * `ORDER BY`: they order bounded aggregate outputs for the reference's
+    * dashboard visuals, and RelationalInvariantsSpec asserts row-order
+    * properties (pareto cumulative, date spine, month-over-month) on the
+    * served frames. Every other cell, q23–q27 and q29–q32 included, ends
+    * without one: its consumers (the oracle gate hashes SORTED rows, the
+    * bench writes to the noop sink) never observe order, and a trailing
+    * sort would cost a range-sampling job, a full output exchange and
+    * the sort itself on the timed path. A caller that needs order sorts
+    * its own rows. PlanSpec pins this boundary.
     */
-  private[graft] def cells: Seq[Q] = {
-    val sorted = RelationalQueries.all.map(_.name).toSet
-    catalog.map { q =>
-      if (sorted(q.name)) q
-      else q.copy(run = (s: SparkSession, d: String) =>
-        org.apache.spark.sql.graft.PlanOps.dropPresentationSort(q.run(s, d)))
-    }
-  }
+  private[graft] def cells: Seq[Q] =
+    RelationalQueries.all ++ EventsQueries.all ++ PipelineQueries.all ++ WarehouseQueries.all
 
-  /** One entry per implemented operator from SURVEY.md §2, served as
-    * [[cells]] describes (setups are not folded in: each `run` calls
+  /** One entry per implemented operator from SURVEY.md §2: each cell's
+    * `run` from [[cells]] (setups are not folded in: each `run` calls
     * its own).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -58,5 +48,5 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    catalog.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    cells.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

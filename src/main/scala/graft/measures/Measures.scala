@@ -77,7 +77,7 @@ object Measures {
     minShare.fold(agg) { s =>
       val tot = fact.agg(sum(dec(col("montant"))).cast(DoubleType).as("ca_tot"))
       agg.crossJoin(broadcast(tot)).filter(col("ca") > col("ca_tot") * s).drop("ca_tot")
-    }.orderBy(col(label))
+    }
   }
 
   /** Drill-down (§2.10 model artifacts): the measure aggregated at
@@ -118,7 +118,6 @@ object Measures {
         lvls.map(c => lit(1) - grouping(col(c))).reduce(_ + _).as("niveau")
       )
       .select(col("niveau") +: lvls.map(col) :+ col("ca_dec").cast(DoubleType).as("ca") :+ col("n"): _*)
-      .orderBy(col("niveau") +: lvls.map(col): _*)
   }
 
   /** Top-1 label measure: "NAME $X" (§2.10 KPI cards). */

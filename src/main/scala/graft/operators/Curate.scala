@@ -296,7 +296,6 @@ object Curate {
         col("kl"),
         col("t.token").as("token_principal"),
         round(-col("t.nc"), 6).as("contrib_principal"))
-      .orderBy(col("source"))
   }
 
   /** Quality-aware duplicate-cluster survivors: for each near-dup

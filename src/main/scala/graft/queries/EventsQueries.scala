@@ -32,7 +32,6 @@ object EventsQueries {
         countDistinct(col("user_id")).as("n_users"),
         dbl(sum(m(col("value")))).as("total_value")
       )
-      .orderBy(col("jour"), col("event_type"))
   }
   private val q23Sql =
     """SELECT CAST(ts AS DATE) AS jour, event_type,
@@ -65,7 +64,6 @@ object EventsQueries {
         count(lit(1)).as("n_events"),
         (count(lit(1)).cast(DoubleType) / sum(col("new_session"))).as("events_par_session")
       )
-      .orderBy(col("user_id"))
   }
   private val q24Sql =
     """WITH seq AS (
@@ -99,7 +97,6 @@ object EventsQueries {
       .count()
     eventTypes
       .foldLeft(pivoted)((df, t) => df.withColumn(s"n_$t", coalesce(col(t), lit(0L))).drop(t))
-      .orderBy(col("jour"))
   }
   private val q25Sql =
     """SELECT CAST(ts AS DATE) AS jour,
@@ -131,7 +128,6 @@ object EventsQueries {
         min(col("k")).as("k_min"),
         max(col("k")).as("k_max")
       )
-      .orderBy(col("event_type"))
   private val q29Sql =
     """SELECT event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS somme_k,
@@ -164,7 +160,6 @@ object EventsQueries {
       .select(col("event_id"), col("user_id"),
         col("prev_click_event_id").as("prev_click_id"),
         col("prev_click_value").as("prev_click_value"))
-      .orderBy(col("event_id"))
   }
   private val j01Sql =
     """WITH clicks AS (SELECT * FROM events WHERE event_type = 'click'),
@@ -211,7 +206,6 @@ object EventsQueries {
         count(lit(1)).as("n_clicks"),
         sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType).as("somme_valeur"),
         min(col("click_id")).as("premier_click"))
-      .orderBy(col("incident_id"))
   }
   private val j02Sql =
     """SELECT i.event_id AS incident_id, i.user_id,

@@ -33,7 +33,6 @@ object PipelineQueries {
     Dedup
       .exact(Tables.documents(spark, dir), "doc_id", col("text"))
       .select(col("keep_id"), col("n_copies"))
-      .orderBy(col("keep_id"))
   private val d01Sql =
     """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
       |FROM documents
@@ -54,7 +53,7 @@ object PipelineQueries {
         when(nTok > 0, (col("n_chars").cast(DoubleType) - (nTok - 1)) / nTok).otherwise(lit(0.0)),
         6
       ).as("longueur_moy_token")
-    ).orderBy(col("doc_id"))
+    )
   }
   private val d02Sql =
     """SELECT doc_id,
@@ -83,7 +82,6 @@ object PipelineQueries {
           6
         ).as("ratio_ponctuation")
       )
-      .orderBy(col("doc_id"))
   private val d03Sql = {
     val nTok = """len(regexp_split_to_array(trim(text), '\s+'))"""
     val stop = """len(regexp_extract_all(text, '\b(the|a|of|to|in|and|is|it|that|for)\b'))"""
@@ -111,7 +109,6 @@ object PipelineQueries {
       .select(col("doc_id"), Text.langGuess(col("text")).as("langue_detectee"))
       .groupBy(col("langue_detectee"))
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("langue_detectee"))
   private val d04Sql = {
     val nTok = """greatest(len(regexp_split_to_array(trim(text), '\s+')), 1)"""
     def sc(p: String) = s"""CAST(len(regexp_extract_all(text, '$p')) AS DOUBLE) / $nTok"""
@@ -164,7 +161,6 @@ object PipelineQueries {
         col("s.empreinte").as("empreinte"),
         col("s.sketch").as("sketch")
       )
-      .orderBy(col("doc_id"))
   private val d05Sql =
     """WITH base AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
@@ -200,7 +196,6 @@ object PipelineQueries {
   private def d06(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .minhashLsh(Tables.documents(spark, dir), "doc_id", "text", shingleN = 3, k = 64, bands = 32, threshold = 0.5)
-      .orderBy(col("id_a"), col("id_b"))
 
   private[graft] def pairsStoreDir(dir: String): String = Fixture.workDir("pairs", dir)
 
@@ -255,7 +250,7 @@ object PipelineQueries {
   // would.
   // ---------------------------------------------------------------------
   private def d09(spark: SparkSession, dir: String): DataFrame =
-    Dedup.clusters(pairsStore(spark, dir)).orderBy(col("id"))
+    Dedup.clusters(pairsStore(spark, dir))
   private val d09Sql =
     """WITH RECURSIVE sh AS (
       |  SELECT doc_id,
@@ -326,7 +321,6 @@ object PipelineQueries {
       .withColumn("rang", row_number().over(w))
       .filter(col("rang") <= 3)
       .select(col("doc_id"), col("rang"), col("tok"), col("score"))
-      .orderBy(col("doc_id"), col("rang"))
   }
   private val d10Sql =
     """WITH toks AS (
@@ -363,7 +357,7 @@ object PipelineQueries {
       col("doc_id"),
       Text.md5SimhashBits(Text.tokens(col("text"))).as("simhash"),
       Text.tokenCount(col("text")).as("n_tokens")
-    ).orderBy(col("doc_id"))
+    )
   }
   private val d07Sql =
     """WITH toks AS (
@@ -395,7 +389,6 @@ object PipelineQueries {
     val em = Tables.embeddings(spark, dir)
     Similarity
       .bruteForceKnn(em, em.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-      .orderBy(col("query_id"), col("rank"))
   }
   private val e01Sql =
     """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
@@ -427,7 +420,6 @@ object PipelineQueries {
     Similarity
       .ivfKnn(em, em.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
         nList = 16, nProbe = 16)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------------
@@ -442,7 +434,6 @@ object PipelineQueries {
     val cents = Similarity.trainCentroids(em, "vec_id", "embedding", k = 16, iters = 3)
     Similarity
       .ivfKnnTrained(em, em.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, cents, nProbe = 16)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------------
@@ -460,7 +451,6 @@ object PipelineQueries {
     Similarity
       .pqKnn(em, em.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, books,
         shortlist = Int.MaxValue)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------------
@@ -481,7 +471,6 @@ object PipelineQueries {
     Similarity
       .pqKnnIvf(em, em.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
         cents, books, nProbe = 16, shortlist = Int.MaxValue)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------------
@@ -510,7 +499,6 @@ object PipelineQueries {
         // positives from the published pair store (vecPairsSetup — e03
         // gates the screen live); the cell measures the MINING
         nearDupPairs = Some(vecPairsStore(spark, dir)))
-      .orderBy(col("anchor_id"))
   }
   private val e07Sql =
     """WITH orig AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -572,7 +560,6 @@ object PipelineQueries {
   private def e08(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestAnn
       .oneShot(spark, dir, e08WorkDir(dir))
-      .orderBy(col("query_id"), col("rank"))
 
   // ---------------------------------------------------------------------
   // e09 — incremental index maintenance: a published IVF-PQ store takes
@@ -620,7 +607,6 @@ object PipelineQueries {
     Similarity
       .pqKnnIvfCoded(coded, vecs, union.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 5, cents, books, nProbe = 16, shortlist = Int.MaxValue)
-      .orderBy(col("query_id"), col("rank"))
   }
   private val e09Sql =
     """WITH orig AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -714,7 +700,6 @@ object PipelineQueries {
           (col("vec_id") >= 2000000L && col("vec_id") < 2000025L)),
         "vec_id", "embedding", k = 5, cents, books,
         nProbe = 16, shortlist = Int.MaxValue)
-      .orderBy(col("query_id"), col("rank"))
   }
   private val e10Sql =
     """WITH orig AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -1077,7 +1062,6 @@ object PipelineQueries {
           (col("vec_id") >= 3000000L && col("vec_id") < 3000030L)),
         "vec_id", "embedding", k = 5, cents, books,
         nProbe = 16, shortlist = Int.MaxValue)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------------
@@ -1247,7 +1231,6 @@ object PipelineQueries {
   private def s12(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestAnn
       .run(spark, dir, e08WorkDir(dir))
-      .orderBy(col("query_id"), col("rank"))
 
   // ---------------------------------------------------------------------
   // s13 — ANN recall-drift monitor (the re-publish decision the frozen-
@@ -1279,7 +1262,6 @@ object PipelineQueries {
   private def s13(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestAnnDrift
       .runExhaustive(spark, dir, s13WorkDir(dir))
-      .orderBy(col("lot"))
 
   // the gate's drift rows in the exhaustive configuration are fully
   // SQL-derivable: the feed/lot/sample arithmetic reproduces n_requetes,
@@ -1325,7 +1307,6 @@ object PipelineQueries {
   private def s14(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestIdShards
       .run(spark, dir, s14WorkDir(dir))
-      .orderBy(col("doc_id"))
 
   // ---------------------------------------------------------------------
   // e03 — embedding near-duplicate pairs via multi-table hyperplane LSH.
@@ -1349,7 +1330,6 @@ object PipelineQueries {
     Dedup
       .embeddingNearDup(e03Corpus(em), "vec_id", "embedding", threshold = 0.99,
         nTables = 8)
-      .orderBy(col("id_a"), col("id_b"))
   }
   private val e03Sql =
     """WITH orig AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -1433,7 +1413,6 @@ object PipelineQueries {
     corpus
       .join(remove, Seq("vec_id"), "left_anti")
       .select(col("vec_id"))
-      .orderBy(col("vec_id"))
   }
   private val d26Sql =
     """WITH RECURSIVE orig AS (SELECT vec_id, embedding AS e FROM embeddings),
@@ -1485,7 +1464,6 @@ object PipelineQueries {
         sha2(col("payload"), 256).as("digest"),
         col("meta.width").as("largeur")
       )
-      .orderBy(col("media_id"))
   private val m01Sql =
     """SELECT doc_id AS media_id,
       |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
@@ -1512,7 +1490,6 @@ object PipelineQueries {
         size(col("features")).as("dim"),
         element_at(col("features"), 1).as("feat0")
       )
-      .orderBy(col("media_id"))
   }
   private val m02Sql =
     """WITH b AS (
@@ -1548,7 +1525,6 @@ object PipelineQueries {
       .decodeQuadSample(
         Multimodal.resizeImagesReal(
           Multimodal.syntheticQuadPng(Tables.documents(spark, dir), everyNth = 5), 64, 64))
-      .orderBy(col("media_id"), col("quadrant"))
   private val m03Sql =
     """SELECT doc_id AS media_id, CAST(q AS INT) AS quadrant,
       |  64 AS largeur, 64 AS hauteur,
@@ -1575,7 +1551,6 @@ object PipelineQueries {
         octet_length(col("frame_bytes")).as("n_bytes"),
         md5(hex(col("frame_bytes"))).as("digest")
       )
-      .orderBy(col("media_id"), col("frame_no"))
   private val m04Sql =
     """WITH v AS (
       |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS total
@@ -1640,7 +1615,6 @@ object PipelineQueries {
           .as("position_image_ok"),
         (array_position(col("toks"), "<aud>") - 1 === col("debut_audio"))
           .as("position_audio_ok"))
-      .orderBy(col("doc_id"))
   }
   private val m06Sql =
     """WITH arr AS (
@@ -1693,7 +1667,6 @@ object PipelineQueries {
     Dedup
       .embeddingNearDup(feats, "media_id", "features",
         threshold = 0.99, nBits = bits, nTables = 8)
-      .orderBy(col("id_a"), col("id_b"))
   }
   private val m05Sql =
     """WITH img AS (
@@ -1744,7 +1717,6 @@ object PipelineQueries {
         count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast(DecimalType(12, 2))).cast(DoubleType).as("ca")
       )
-      .orderBy(col("o_orderstatus"))
   }
   private val u01Sql =
     """WITH current AS (SELECT * FROM orders WHERE o_orderkey % 3 <> 0),
@@ -1780,7 +1752,6 @@ object PipelineQueries {
         count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast(DecimalType(12, 2))).cast(DoubleType).as("ca")
       )
-      .orderBy(col("o_orderstatus"))
   }
   private val u02Sql =
     """WITH current AS (SELECT * FROM orders WHERE o_orderkey % 3 <> 0),
@@ -1828,7 +1799,6 @@ object PipelineQueries {
         count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(12, 2))).cast(DoubleType).as("total_value")
       )
-      .orderBy(col("event_type"))
   }
   private val w01Sql =
     """SELECT event_type, COUNT(*) AS n_events,
@@ -1855,7 +1825,6 @@ object PipelineQueries {
         sum(col("value").cast(DecimalType(12, 2))).cast(DoubleType).as("total_value"),
         round(max(col("valeur_moyenne")), 6).as("valeur_moyenne")
       )
-      .orderBy(col("event_type"))
   }
   private val k01Sql =
     """WITH dim AS (SELECT event_type, AVG(value) AS valeur_moyenne FROM events GROUP BY 1)
@@ -1926,7 +1895,6 @@ object PipelineQueries {
         count(lit(1)).as("n_lignes"),
         sum(col("l_extendedprice").cast(DecimalType(12, 2))).cast(DoubleType).as("ca_lignes")
       )
-      .orderBy(col("o_orderstatus"))
   }
   private val io02Sql =
     """SELECT o_orderstatus, COUNT(*) AS n_lignes,
@@ -1955,7 +1923,6 @@ object PipelineQueries {
     Dedup
       .minhashLshAgainst(batch, corpus, "doc_id", "text",
         shingleN = 3, k = 64, bands = 32, threshold = 0.5)
-      .orderBy(col("id_batch"), col("id_corpus"))
   }
   private val d14Sql =
     """WITH sh AS (
@@ -1995,7 +1962,6 @@ object PipelineQueries {
   private def s06(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestDedup
       .run(spark, dir, s06WorkDir(dir))
-      .orderBy(col("id_batch"), col("id_corpus"))
 
   // ---------------------------------------------------------------------
   // s15 — streaming decontamination screen (§2.9 × the d16 operator):
@@ -2014,7 +1980,6 @@ object PipelineQueries {
   private def s15(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestDecon
       .run(spark, dir, s15WorkDir(dir))
-      .orderBy(col("doc_id"))
 
   // ---------------------------------------------------------------------
   // s16 — streaming classifier screen (§2.9 × the d24 operator): the
@@ -2032,7 +1997,6 @@ object PipelineQueries {
   private def s16(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestClassify
       .run(spark, dir, s16WorkDir(dir))
-      .orderBy(col("doc_id"))
 
   // ---------------------------------------------------------------------
   // d21 — dataset mixing: the per-source sampling-weight recipe step.
@@ -2049,7 +2013,6 @@ object PipelineQueries {
   private def d21(spark: SparkSession, dir: String): DataFrame =
     Mix
       .weightedSample(Tables.documents(spark, dir), "doc_id", "source", d21Weights)
-      .orderBy(col("doc_id"), col("epoque"))
   private val d21Sql =
     """WITH w AS (
       |  SELECT doc_id, source,
@@ -2088,7 +2051,6 @@ object PipelineQueries {
     graft.operators.Sampling
       .stratifiedQuota(Tables.documents(spark, dir), "doc_id", "source",
         d27Quotas, defaultQuota = 5)
-      .orderBy(col("stratum"), col("rang"))
   private val d27Sql =
     """WITH q AS (
       |  SELECT doc_id, source,
@@ -2111,11 +2073,14 @@ object PipelineQueries {
   // global token offset. The drained log must equal the one-shot pack
   // (same oracle as d18).
   // ---------------------------------------------------------------------
+  private def s07WorkDir(dir: String): String = Fixture.workDir("s07", dir)
+
+  /** Untimed load-phase setup: the staged 4-range feed. */
+  def s07Setup(spark: SparkSession, dir: String): Unit =
+    graft.streaming.IngestPack.setup(spark, dir, s07WorkDir(dir))
+
   private def s07(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.IngestPack
-      .run(spark, dir,
-        Fixture.workDir("s07", dir))
-      .orderBy(col("doc_id"))
+    graft.streaming.IngestPack.run(spark, dir, s07WorkDir(dir))
 
   // ---------------------------------------------------------------------
   // s08 — streaming SEMANTIC ingestion screen: embedding micro-batches
@@ -2138,7 +2103,6 @@ object PipelineQueries {
   private def s08(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestSemantic
       .run(spark, dir, s08WorkDir(dir))
-      .orderBy(col("id_batch"), col("id_corpus"))
 
   private def s11WorkDir(dir: String): String = Fixture.workDir("s11", dir)
 
@@ -2161,7 +2125,6 @@ object PipelineQueries {
   private def s11(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestDrift
       .run(spark, dir, s11WorkDir(dir))
-      .orderBy(col("source"))
   private val s11Sql =
     """WITH corpus_tok AS (
       |  SELECT unnest(CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
@@ -2238,7 +2201,6 @@ object PipelineQueries {
   private def s09(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestQuality
       .run(spark, dir, s09WorkDir(dir))
-      .orderBy(col("doc_id"))
   private val s09Sql =
     """WITH arr AS (
       |  SELECT doc_id,
@@ -2310,7 +2272,6 @@ object PipelineQueries {
   private def s10(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IngestCurate
       .run(spark, dir, s10WorkDir(dir))
-      .orderBy(col("doc_id"))
   private val s10Sql =
     """WITH sh AS (
       |  SELECT doc_id,
@@ -2424,7 +2385,6 @@ object PipelineQueries {
   private def d15(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .chunkDedup(Tables.documents(spark, dir), "doc_id", "text", chunkTokens = 16)
-      .orderBy(col("doc_id"))
   private val d15Sql =
     """WITH t AS (
       |  SELECT doc_id,
@@ -2463,7 +2423,6 @@ object PipelineQueries {
   private def d17(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .chunkScrub(Tables.documents(spark, dir), "doc_id", "text", chunkTokens = 16)
-      .orderBy(col("doc_id"))
   private val d17Sql =
     """WITH t AS (
       |  SELECT doc_id,
@@ -2510,7 +2469,6 @@ object PipelineQueries {
     Dedup
       .neardupScrubPairs(Tables.documents(spark, dir), pairsStore(spark, dir), "doc_id")
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-      .orderBy(col("doc_id"))
   private val d25Sql =
     """WITH RECURSIVE sh AS (
       |  SELECT doc_id,
@@ -2555,7 +2513,6 @@ object PipelineQueries {
     val isEval = col("doc_id") % 50 === 0 && col("doc_id") > 0
     graft.operators.Decontaminate
       .ngramOverlapBloom(docs.filter(!isEval), docs.filter(isEval), "doc_id", "text", n = 3)
-      .orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -2569,7 +2526,6 @@ object PipelineQueries {
     val isEval = col("doc_id") % 50 === 0 && col("doc_id") > 0
     graft.operators.Decontaminate
       .ngramOverlap(docs.filter(!isEval), docs.filter(isEval), "doc_id", "text", n = 3)
-      .orderBy(col("doc_id"))
   }
   private val d16Sql =
     """WITH sh AS (
@@ -2643,7 +2599,6 @@ object PipelineQueries {
           col("frac_bigrammes_dupliques") < 0.9 && col("langue") =!= "und")
           .as("retenu")
       )
-      .orderBy(col("doc_id"))
   }
   // Oracle parity caveat: the kernel reproduces Java-regex \b (Unicode
   // isLetterOrDigit word chars) while DuckDB's RE2 \b is ASCII-only —
@@ -2757,7 +2712,6 @@ object PipelineQueries {
     remote
       .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      .orderBy(col("n_nationkey"))
   }
   private val io04Sql =
     """SELECT n_nationkey, n_name, r_name
@@ -2768,7 +2722,6 @@ object PipelineQueries {
     val dst = Fixture.workDir("io03", dir)
     graft.operators.Compact
       .parquet(spark, s"$dir/documents.parquet", dst, Seq(col("doc_id")))
-      .orderBy(col("doc_id"))
   }
   private val io03Sql =
     """SELECT doc_id, text, lang, source, n_chars
@@ -2844,7 +2797,6 @@ object PipelineQueries {
       .join(back, Seq("doc_id"), "left")
       .select(col("doc_id"),
         md5(coalesce(concat_ws(" ", col("toks")), lit(""))).as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -2893,7 +2845,6 @@ object PipelineQueries {
       .join(back, Seq("doc_id"), "left")
       .select(col("doc_id"),
         md5(coalesce(concat_ws(" ", col("toks")), lit(""))).as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -2929,7 +2880,6 @@ object PipelineQueries {
       .join(back, Seq("doc_id"), "left")
       .select(col("doc_id"),
         md5(coalesce(concat_ws(" ", col("toks")), lit(""))).as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
   private val io07Sql =
     """SELECT doc_id,
@@ -2974,7 +2924,6 @@ object PipelineQueries {
       .join(back, Seq("doc_id"), "left")
       .select(col("doc_id"),
         md5(coalesce(concat_ws(" ", col("toks")), lit(""))).as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
   private val io08Sql =
     """SELECT doc_id,
@@ -3085,7 +3034,7 @@ object PipelineQueries {
       lit(r2.pending).as("n_tokens"),
       lit(fired).as("n_tranches"),
       lit("politique").as("empreinte"))
-    shards.unionByName(politique).orderBy(col("shard_id"))
+    shards.unionByName(politique)
   }
   private val io09Sql =
     """WITH t AS (
@@ -3205,7 +3154,7 @@ object PipelineQueries {
       lit(r.pending).as("n_tokens"),
       lit(if (r.repacked) 1L else 0L).as("n_tranches"),
       lit("politique").as("empreinte"))
-    shards.unionByName(politique).orderBy(col("shard_id"))
+    shards.unionByName(politique)
   }
   private val io10Sql =
     """WITH t AS (
@@ -3275,7 +3224,6 @@ object PipelineQueries {
         size(regexp_extract_all(col("text"), lit("\\w+|[^\\w\\s]"), lit(0))).as("n_tokens_regex"),
         Text.tokenCount(col("text")).as("n_tokens_ws")
       )
-      .orderBy(col("doc_id"))
   private val d08Sql = {
     val ws = """CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
                |     ELSE len(regexp_split_to_array(trim(text), '\s+')) END""".stripMargin
@@ -3308,7 +3256,6 @@ object PipelineQueries {
         col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("n_mots"),
         md5(Bpe.detokenize(Bpe.encodePieces(model, col("text")))).as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
   private val d23Sql =
     """SELECT doc_id,
@@ -3363,7 +3310,6 @@ object PipelineQueries {
       .select(col("doc_id"),
         md5(coalesce(Bpe.decodeIdStream(model, col("ids")), lit("")))
           .as("empreinte_recomposee"))
-      .orderBy(col("doc_id"))
   }
   private val d39Sql =
     """SELECT doc_id,
@@ -3393,7 +3339,6 @@ object PipelineQueries {
         col("doc_id"),
         round(model.score(col("text")), 6).as("score"),
         (round(model.score(col("text")), 6) > 0).as("classe"))
-      .orderBy(col("doc_id"))
   }
   private val d24Sql =
     """WITH lab AS (
@@ -3438,7 +3383,6 @@ object PipelineQueries {
   private def d29(spark: SparkSession, dir: String): DataFrame =
     LangModel
       .bigramScore(Tables.documents(spark, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
   private val d29Sql =
     """WITH arr AS (
       |  SELECT doc_id,
@@ -3481,7 +3425,6 @@ object PipelineQueries {
   private def d30(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .spanDedup(Tables.documents(spark, dir), "doc_id", "text", gramTokens = 8)
-      .orderBy(col("doc_id"))
   private val d30Sql =
     """WITH arr AS (
       |  SELECT doc_id,
@@ -3532,7 +3475,6 @@ object PipelineQueries {
   private def d31(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .spanScrub(Tables.documents(spark, dir), "doc_id", "text", gramTokens = 8)
-      .orderBy(col("doc_id"))
   private val d31Sql =
     """WITH arr AS (
       |  SELECT doc_id,
@@ -3596,7 +3538,6 @@ object PipelineQueries {
   private def d36(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .repetitionScrub(Tables.documents(spark, dir), "doc_id", "text", gramTokens = 3)
-      .orderBy(col("doc_id"))
   private val d36Sql =
     """WITH arr AS (
       |  SELECT doc_id,
@@ -3649,7 +3590,6 @@ object PipelineQueries {
     Dedup
       .spanDedup(Tables.documents(spark, dir), "doc_id", "text", gramTokens = 8,
         exactFingerprints = false)
-      .orderBy(col("doc_id"))
 
   // the d03 quality expression as DuckDB SQL, shared by the curation
   // oracles (d33/d34 select BY this score, so the oracle must rebuild
@@ -3743,7 +3683,6 @@ object PipelineQueries {
     graft.operators.Curate
       .budgetSelect(prepared, "doc_id", "qualite", "n_jetons", budget = 10000L)
       .withColumnRenamed("cum", "jetons_cumules")
-      .orderBy(col("rang"))
   }
   private val d33Sql =
     s"""WITH q AS (
@@ -3780,7 +3719,6 @@ object PipelineQueries {
       Text.qualityScore(col("text")).as("qualite"))
     graft.operators.Curate
       .percentileRank(prepared, "doc_id", "qualite")
-      .orderBy(col("doc_id"))
   }
   private val d38Sql =
     s"""WITH q AS (
@@ -3806,7 +3744,6 @@ object PipelineQueries {
     val scored = docs.select(col("doc_id"), Text.qualityScore(col("text")).as("qualite"))
     graft.operators.Curate
       .bestSurvivors(scored, Dedup.clusters(pairsStore(spark, dir)), "doc_id", "qualite")
-      .orderBy(col("cluster_id"))
   }
   private val d34Sql =
     s"""WITH RECURSIVE sh AS (
@@ -3856,7 +3793,6 @@ object PipelineQueries {
   private def d35(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Curate
       .trainingOrder(Tables.documents(spark, dir), "doc_id", seed = "melange42")
-      .orderBy(col("rang"))
   private val d35Sql =
     """WITH k AS (
       |  SELECT doc_id,
@@ -3923,7 +3859,6 @@ object PipelineQueries {
       .stratifiedQuota(kept, "doc_id", "source", Map.empty, defaultQuota = 10)
       .join(kept.select(col("doc_id"), col("ratio_duplique"), col("lm_score")), Seq("doc_id"))
       .select(col("stratum"), col("rang"), col("doc_id"), col("ratio_duplique"), col("lm_score"))
-      .orderBy(col("stratum"), col("rang"))
   }
   private val p02Sql =
     """WITH arr AS (
@@ -4182,7 +4117,6 @@ object PipelineQueries {
       .join(fromDisk, Seq("rang"))
       .select(col("rang"), col("doc_id"), col("empreinte"), col("qualite"),
         col("n_jetons"), col("jetons_cumules"), col("seq_debut"), col("seq_fin"))
-      .orderBy(col("rang"))
   }
 
   /** The TRAINER-READY tail of the curation pipelines (p05):
@@ -4257,7 +4191,6 @@ object PipelineQueries {
         md5(org.apache.spark.sql.graft.TextExpr.bpeDecodeIdStream(col("ids"), idc))
           .as("empreinte"),
         col("qualite"), col("n_jetons"), col("jetons_cumules"))
-      .orderBy(col("rang"))
   }
 
   private def p03(spark: SparkSession, dir: String): DataFrame =
@@ -5192,7 +5125,6 @@ object PipelineQueries {
       .agg(count(lit(1)).as("n_docs"))
     top
       .join(broadcast(docFreq), Seq("bigramme"))
-      .orderBy(col("n").desc, col("bigramme"))
   }
   private val d11Sql =
     """WITH t AS (
@@ -5229,7 +5161,6 @@ object PipelineQueries {
         Text.matchCount(col("text"), Text.Pii.phone).as("n_telephones"),
         Text.matchCount(col("text"), Text.Pii.number).as("n_nombres")
       )
-      .orderBy(col("doc_id"))
   private val d12Sql = {
     val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
     val ip = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
@@ -5269,7 +5200,6 @@ object PipelineQueries {
           .otherwise(lit("test"))
       )
       .withColumn("echantillon_10pct", (col("slot") < 6554).cast(IntegerType))
-      .orderBy(col("doc_id"))
   }
   private val d13Sql =
     """WITH h AS (
@@ -5292,7 +5222,6 @@ object PipelineQueries {
   private def d18(spark: SparkSession, dir: String): DataFrame =
     Pack
       .sequences(Tables.documents(spark, dir), "doc_id", "text", seqTokens = 1024)
-      .orderBy(col("doc_id"))
   private val d18Sql =
     """WITH t AS (
       |  SELECT doc_id,
@@ -5326,7 +5255,6 @@ object PipelineQueries {
   private def d20(spark: SparkSession, dir: String): DataFrame =
     Pack
       .manifest(Tables.documents(spark, dir), "doc_id", "text", seqTokens = 1024)
-      .orderBy(col("seq_id"))
   private val d20Sql =
     """WITH t AS (
       |  SELECT doc_id,
@@ -5386,7 +5314,6 @@ object PipelineQueries {
         md5(array_join(
           transform(array_sort(collect_list(struct(col("seq_id"), col("h")))),
             p => p.getField("h")), ":")).as("empreinte"))
-      .orderBy(col("shard_id"))
   }
   private val d22Sql =
     """WITH t AS (
@@ -5460,7 +5387,6 @@ object PipelineQueries {
           greatest(element_at(col("c"), 3), lit(1L)).cast("double"), 6)
           .as("frac_bigrammes_dupliques")
       )
-      .orderBy(col("doc_id"))
   }
   private val d19Sql =
     """WITH t AS (
@@ -5508,7 +5434,6 @@ object PipelineQueries {
   private def s04(spark: SparkSession, dir: String): DataFrame =
     EventsStream
       .runToCompletion(EventsStream.dedupCounts(spark, dir), "graft_s04")
-      .orderBy(col("event_type"))
   private val s04Sql =
     """SELECT event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
@@ -5524,7 +5449,6 @@ object PipelineQueries {
   private def s01(spark: SparkSession, dir: String): DataFrame =
     EventsStream
       .runToCompletion(EventsStream.tumblingDaily(spark, dir), "graft_s01")
-      .orderBy(col("jour"), col("event_type"))
   private val s01Sql =
     """SELECT CAST(ts AS DATE) AS jour, event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
@@ -5584,7 +5508,8 @@ object PipelineQueries {
     Q("s06_stream_ingest_dedup", "streaming ingestion screen == one-shot d14 (§2.9)", s06, Some(d14Sql), heavy = true, setup = Seq(s06Setup)),
     Q("s15_stream_decon", "streaming decontamination screen: arriving batches vs the published eval-gram store == one-shot d16 (§2.9)", s15, Some(d16Sql), heavy = true, setup = Seq(s15Setup)),
     Q("s16_stream_classify", "streaming classifier screen: per-batch pure-map scoring with the published hashed-NB weights == one-shot d24 (§2.9)", s16, Some(d24Sql), heavy = true, setup = Seq(s16Setup)),
-    Q("s07_stream_pack", "streaming incremental packing == one-shot d18 (§2.9)", s07, Some(d18Sql), heavy = true),
+    Q("s07_stream_pack", "streaming incremental packing == one-shot d18 (§2.9)", s07, Some(d18Sql), heavy = true,
+      setup = Seq(s07Setup)),
     Q("s08_stream_semantic_screen", "streaming embedding-space screen vs exhaustive cross-split cosine oracle (§2.9)", s08, Some(s08Sql), heavy = true, setup = Seq(s08Setup)),
     Q("s09_stream_quality_screen", "streaming perplexity screen against the stored corpus LM (§2.9 composed with d29)", s09, Some(s09Sql), heavy = true, setup = Seq(s09Setup)),
     Q("s10_stream_curate", "composed streaming ingest: dedup screen → LM quality screen → incremental pack in one foreachBatch (§2.9, p02's streaming twin)", s10, Some(s10Sql), heavy = true, setup = Seq(s10Setup)),

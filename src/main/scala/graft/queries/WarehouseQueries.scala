@@ -20,7 +20,7 @@ object WarehouseQueries {
   // etl01 — dim_date: dense spine + smart key + period starts.
   // ---------------------------------------------------------------------
   private def etl01(spark: SparkSession, dir: String): DataFrame =
-    Star.dimDate(Tables.orders(spark, dir)).orderBy(col("date_key"))
+    Star.dimDate(Tables.orders(spark, dir))
   private val etl01Sql =
     """WITH RECURSIVE spine(jour) AS (
       |  SELECT CAST(MIN(o_orderdate) AS DATE) FROM orders
@@ -50,7 +50,6 @@ object WarehouseQueries {
         Tables.nation(spark, dir),
         Tables.region(spark, dir)
       )
-      .orderBy(col("client_key"))
   private val initcapDuck =
     "array_to_string(list_transform(string_split(lower(%s), ' '), w -> upper(w[1]) || w[2:]), ' ')"
   private val etl02Sql =
@@ -78,7 +77,6 @@ object WarehouseQueries {
           Tables.region(spark, dir)
         )
       )
-      .orderBy(col("source_commande_id"))
   private val etl03Sql =
     """WITH dim_client AS (
       |  SELECT ROW_NUMBER() OVER (ORDER BY c_custkey) AS client_key, c_custkey
@@ -120,7 +118,6 @@ object WarehouseQueries {
         col("montant").cast(DoubleType).as("montant"),
         col("statut")
       )
-      .orderBy(col("source_commande_id"))
   }
   private val etl04Sql =
     """SELECT o_orderkey AS source_commande_id,
@@ -196,7 +193,6 @@ object WarehouseQueries {
         Tables.customer(spark, dir).select(col("c_custkey"), col("c_name")),
         "client_key",
         Seq(col("c_name")))
-      .orderBy(col("c_custkey"))
   private val etl06Sql =
     """SELECT c_custkey, c_name,
       |  ROW_NUMBER() OVER (ORDER BY c_name) AS client_key
@@ -256,7 +252,6 @@ object WarehouseQueries {
         date_format(col("derniere"), "MMM yyyy").as("dernier_mois"),
         datediff(col("derniere"), col("premiere")).cast(LongType).as("jours_ecart")
       )
-      .orderBy(col("nation"))
   }
   private val q27Sql =
     s"""SELECT ${initcapDuck.format("n_name")} AS nation,
@@ -293,7 +288,6 @@ object WarehouseQueries {
         expr("percentile(ca_jour, 0.75)").as("q3"),
         max(col("ca_jour")).as("ca_max")
       )
-      .orderBy(col("jour_semaine"))
   }
   // ---------------------------------------------------------------------
   // q31 — visual-level measure filter (§2.2 P12, the pbix "[CA Total] >
@@ -386,7 +380,6 @@ object WarehouseQueries {
         "graft_s02",
         mode = "update"
       )
-      .orderBy(col("user_id"))
   private val s02Sql =
     """WITH seq AS (
       |  SELECT user_id, event_id,
@@ -417,7 +410,6 @@ object WarehouseQueries {
         "graft_s05",
         mode = "update"
       )
-      .orderBy(col("user_id"), col("debut_s"))
   private val s05Sql =
     """WITH seq AS (
       |  SELECT user_id, event_id,
@@ -448,7 +440,7 @@ object WarehouseQueries {
   // ---------------------------------------------------------------------
   private def v01(spark: SparkSession, dir: String): DataFrame = {
     graft.views.Views.register(spark, dir)
-    spark.sql("SELECT * FROM v_kpi_nation_mois ORDER BY n_name, mois")
+    spark.sql("SELECT * FROM v_kpi_nation_mois")
   }
   private val v01Sql =
     """SELECT n_name, CAST(date_trunc('month', o_orderdate) AS DATE) AS mois,
@@ -480,7 +472,6 @@ object WarehouseQueries {
       .read(spark, out, schema)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).as("total_chars"))
-      .orderBy(col("lang"))
   }
   private val io01Sql =
     """SELECT lang, COUNT(*) AS n_docs, CAST(SUM(length(text)) AS BIGINT) AS total_chars
@@ -496,7 +487,6 @@ object WarehouseQueries {
   private def s03(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.EventsStream
       .runToCompletion(graft.streaming.EventsStream.slidingWeekly(spark, dir), "graft_s03")
-      .orderBy(col("debut_fenetre"), col("event_type"))
   private val s03Sql =
     """SELECT CAST(CAST(ts AS DATE) - INTERVAL (k.k) DAY AS DATE) AS debut_fenetre,
       |       event_type,

@@ -79,46 +79,23 @@ object IncrementalEtl {
     * carries it beside the `orders` stamp, so a changed source or staging
     * scheme re-stages instead of replaying the old feed.
     */
-  private val feedFormat = "orders-range4-mtime-v1"
+  private val feedFormat = "orders-range4-mtime-v2" // v2: exact-quantile ranges ([[Feed.stage]])
 
   /** Stage the feed as 4 contiguous DATE RANGES (the realistic arrival
     * order — a month's orders land together), so micro-batches overlap
     * few partitions and the partition-scoped merge has something to
-    * skip. Idempotent per input (a [[graft.engine.Fixture]] on the feed
-    * dir): this is test-harness plumbing standing in for files that
-    * simply ARRIVE in production, so Bench runs it untimed as load-phase
-    * setup, like io02's bucketed table.
+    * skip. Date-ordered ARRIVAL is the feed contract, so the staging
+    * encodes it in the files' mtimes ([[Feed.stage]]). Idempotent per
+    * input (a [[graft.engine.Fixture]] on the feed dir), so Bench runs it
+    * untimed as load-phase setup, like io02's bucketed table.
     */
   def stageFeed(spark: SparkSession, dir: String, targetDir: String): Unit = {
     val feedDir = s"$targetDir/feed"
     val fingerprint = s"orders:${Fixture.stamp(spark, s"$dir/orders.parquet")}:$feedFormat"
     Fixture.once(spark, feedDir, fingerprint) {
-      // one range-partitioned write, then the part files are republished
-      // with STRICTLY INCREASING mtimes in range order: the file stream
-      // source orders its triggers by modification time, and a single
-      // job's part files share one mtime — leaving the 2-file trigger
-      // pairing to a filesystem tie-break that varies by box (observed:
-      // ranges paired (1,3)(2,4) on one VM, tripling the month-boundary
-      // overlaps the spec bounds). Date-ordered ARRIVAL is the feed
-      // contract, so the staging must actually encode it. The staging
-      // dir sits inside the feed dir, hidden from the stream source by
-      // its `_` prefix, so the build writes only under the fixture.
-      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
-      val staging = new org.apache.hadoop.fs.Path(feedPath, "_staging")
-      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.read.parquet(s"$dir/orders.parquet")
-        .select(orderSchema.fieldNames.map(col): _*)
-        .repartitionByRange(4, col("o_orderdate"))
-        .write.mode("overwrite").parquet(staging.toString)
-      val parts = fs.listStatus(staging).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 60000L
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val dst = new org.apache.hadoop.fs.Path(feedPath, p.getName)
-        require(fs.rename(p, dst), s"stageFeed: publishing $p failed")
-        fs.setTimes(dst, base + i * 60000L, -1)
-      }
-      fs.delete(staging, true)
+      Feed.stage(
+        spark.read.parquet(s"$dir/orders.parquet").select(orderSchema.fieldNames.map(col): _*),
+        unix_date(to_date(col("o_orderdate"))), feedDir)
     }
   }
 

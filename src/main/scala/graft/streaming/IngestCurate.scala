@@ -51,7 +51,7 @@ object IngestCurate {
   /** Bump when any stored-artifact layout or screen parameter changes —
     * the setup fingerprint carries it (the s06/s08/s09 convention).
     */
-  private val curFormat = "curate-minhash3x64-lm0.5-med-pack1024-v3"
+  private val curFormat = "curate-minhash3x64-lm0.5-med-pack1024-v4" // v4: Feed.stage ranges
   private val K = 0.5
   private[streaming] val SeqTokens = 1024
 
@@ -66,20 +66,9 @@ object IngestCurate {
     val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$curFormat"
     Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-      val feedDir = s"$workDir/feed"
-      docs.filter(isBatch)
-        .repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(feedDir)
-      // strictly increasing mtimes in range order (the IngestPack
-      // pattern): FileStreamSource replays oldest-first, and packing is
+      // 4 ascending doc_id ranges in arrival order: packing is
       // order-sensitive
-      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
-      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val parts = fs.listStatus(feedPath)
-        .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - 60000L * parts.length
-      parts.zipWithIndex.foreach { case (p, i) => fs.setTimes(p, base + i * 60000L, -1) }
+      Feed.stage(docs.filter(isBatch), col("doc_id"), s"$workDir/feed")
 
       val corpus = docs.filter(!isBatch)
       Dedup.signatures(corpus, "doc_id", "text")

@@ -121,8 +121,10 @@ object IngestDrift {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
+          // each appended log file is laid out by source
           graft.operators.Curate
             .driftAgainst(batch, "doc_id", "text", "source", vocab)
+            .orderBy(col("source"))
             .write.mode("append").parquet(outDir)
         }
         ()

@@ -61,14 +61,14 @@ object IngestIdShards {
   ))
 
   /** Bump when the model parameters or the log layout change. */
-  private val format = "bpeids-m256-w20000-b512-v2" // v2: slice log persists `fin`
+  private val format = "bpeids-m256-w20000-b512-v3" // v3: Feed.stage ranges
   private val NumMerges = 256
   private val TopWords = 20000
   private[graft] val SeqTokens = 512
 
   /** One-time setup: stage the corpus as 4 mtime-ordered doc_id-range
     * files (real micro-batches in arrival order — packing is
-    * order-sensitive, the IngestPack staging) and PUBLISH the
+    * order-sensitive; [[Feed.stage]]) and PUBLISH the
     * tokenizer: train on the corpus as it exists at publish time,
     * persist, freeze. Idempotent per input via the fingerprint marker.
     */
@@ -76,17 +76,7 @@ object IngestIdShards {
     val fingerprint = s"documents:${Fixture.stamp(spark, s"$dir/documents.parquet")}:$format"
     Fixture.once(spark, workDir, fingerprint) {
       val docs = spark.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-      val feedDir = s"$workDir/feed"
-      docs
-        .repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(feedDir)
-      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
-      val fs = feedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val parts = fs.listStatus(feedPath)
-        .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - 60000L * parts.length
-      parts.zipWithIndex.foreach { case (p, i) => fs.setTimes(p, base + i * 60000L, -1) }
+      Feed.stage(docs, col("doc_id"), s"$workDir/feed")
       Bpe.writeModel(spark,
         Bpe.train(docs, "text", numMerges = NumMerges, topWords = TopWords),
         s"$workDir/tokenizer")

@@ -74,6 +74,5 @@ object Typed {
       .groupByKey(_.o_orderstatus)
       .agg(CaSum.toColumn.name("ca"), CountAgg.toColumn.name("n_orders"))
       .toDF("o_orderstatus", "ca", "n_orders")
-      .orderBy("o_orderstatus")
   }
 }

@@ -71,6 +71,10 @@ class HarnessSpec extends SparkSpec {
     assert(tmpdirUses.isEmpty, s"work dir outside Fixture.workDir: $tmpdirUses")
   }
 
+  test("feed files get their arrival mtimes only from streaming/Feed.scala") {
+    assert(filesContaining("setTimes") == Seq("src/main/scala/graft/streaming/Feed.scala"))
+  }
+
   test("java.nio.file and java.io.File appear in main only on the pinned local-disk paths") {
     val allowed = Seq(
       "src/main/scala/graft/Bench.scala", // the committed baseline read

@@ -321,9 +321,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming decontamination screen (s15) equals the one-shot d16 screen over the feed") {
     import org.apache.spark.sql.functions._
-    // the served frame is unsorted (the catalog's presentation sorts
-    // are stripped — the gate hashes sorted rows); equality here is
-    // over CONTENT, so sort the collected side by the key
+    // the served frame is unsorted (only the relational cells order
+    // their rows — the gate hashes sorted rows); equality here is over
+    // CONTENT, so sort the collected side by the key
     val res = SparkEntry.queries("s15_stream_decon")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming classifier screen (s16) equals the one-shot d24 scoring under the stored weights") {
     import org.apache.spark.sql.functions._
-    // served frame unsorted (stripped presentation sort) — sort the
+    // served frame unsorted (no presentation sort) — sort the
     // collected side; the assertion is content equality
     val res = SparkEntry.queries("s16_stream_classify")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2)))
